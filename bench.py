@@ -15,6 +15,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import __spark_entry__ as _ent  # noqa: E402
 from light_etl_windows_container_poc_spark.queries import QUERIES  # noqa: E402
 from light_etl_windows_container_poc_spark.session import get_spark  # noqa: E402
 
@@ -36,6 +37,26 @@ HEADLINE = [
     "knn_graph",             # block-GEMM top-k for EVERY row
     "curate_corpus",         # composed 5-stage curation pipeline
 ]
+
+
+def run_suite(spark, registry, sf_dir: str) -> tuple[dict[str, float], list[str]]:
+    """Run every query in ``registry`` once, cold.
+
+    Returns per-query wall seconds and the sorted names that raised. A
+    failing query is still timed, but it is reported as failed, never
+    counted as a fast success.
+    """
+    times: dict[str, float] = {}
+    failed: list[str] = []
+    for name, fn in registry.items():
+        q0 = time.time()
+        try:
+            fn(spark, sf_dir).collect()
+        except Exception:
+            failed.append(name)  # bench must still emit its one JSON line
+        times[name] = round(time.time() - q0, 3)
+        spark.catalog.clearCache()
+    return times, sorted(failed)
 
 
 def main() -> None:
@@ -73,69 +94,24 @@ def main() -> None:
     # round-over-round regression tripwire for the non-headline surface.
     # Per-query timings feed the tripwire's attribution: a total alone can
     # regress 1.6× without saying which of 141 queries moved.
-    suite_total, suite_n = 0.0, 0
+    suite_total = 0.0
     suite_times: dict[str, float] = {}
+    failed: list[str] = []
     if os.environ.get("SPARK_GRAFT_SKIP_SUITE") != "1":
         t0 = time.time()
-        for name, fn in QUERIES.items():
-            q0 = time.time()
-            try:
-                fn(spark, sf_dir).collect()
-                suite_n += 1
-            except Exception:
-                pass  # bench must still emit its one JSON line
-            suite_times[name] = round(time.time() - q0, 3)
-            spark.catalog.clearCache()
+        suite_times, failed = run_suite(spark, QUERIES, sf_dir)
         suite_total = time.time() - t0
     slowest = dict(sorted(suite_times.items(),
                           key=lambda kv: kv[1], reverse=True)[:10])
-    # round-over-round comparability: rounds 4+ keep adding certification
-    # queries, so the all-queries total is no longer comparable to
-    # BENCH_r03's 141-query number. WHITELIST the round-3 population (the
-    # union of the per-round certified lists in __spark_entry__, which is
-    # exactly the 141 queries that existed at round 3) — a blacklist of
-    # additions would silently absorb every future round's new queries.
-    import __spark_entry__ as _ent
-    r3_names = (set(_ent._R01_CERTIFIED) | set(_ent._R02_CERTIFIED)
-                | set(_ent._R03_CERTIFIED))
-    suite_r3_subset = round(sum(t for n, t in suite_times.items()
-                                if n in r3_names), 3)
-    # same tripwire one generation later: the 160-query round-4 population
-    r4_names = r3_names | set(_ent._R04_CERTIFIED)
-    suite_r4_subset = round(sum(t for n, t in suite_times.items()
-                                if n in r4_names), 3)
-    # ...and the frozen 201-query round-5 population for round 6+
-    r5_names = set(_ent._R05_POPULATION)
-    suite_r5_subset = round(sum(t for n, t in suite_times.items()
-                                if n in r5_names), 3)
-    # ...and the frozen round-6 population for round 7+
-    r6_names = set(_ent._R06_POPULATION)
-    suite_r6_subset = round(sum(t for n, t in suite_times.items()
-                                if n in r6_names), 3)
-    # ...and the frozen round-7 population for round 8+
-    r7_names = set(_ent._R07_POPULATION)
-    suite_r7_subset = round(sum(t for n, t in suite_times.items()
-                                if n in r7_names), 3)
-    # ...and the frozen round-8 population for round 9+
-    r8_names = set(_ent._R08_POPULATION)
-    suite_r8_subset = round(sum(t for n, t in suite_times.items()
-                                if n in r8_names), 3)
-    # ...and the frozen round-9 population for round 10+
-    r9_names = set(_ent._R09_POPULATION)
-    suite_r9_subset = round(sum(t for n, t in suite_times.items()
-                                if n in r9_names), 3)
-    # ...and the frozen round-10 population for round 11+
-    r10_names = set(_ent._R10_POPULATION)
-    suite_r10_subset = round(sum(t for n, t in suite_times.items()
-                                 if n in r10_names), 3)
-    # ...and the frozen round-11 population for round 12+
-    r11_names = set(_ent._R11_POPULATION)
-    suite_r11_subset = round(sum(t for n, t in suite_times.items()
-                                 if n in r11_names), 3)
-    # ...and the frozen round-12 population for round 13+
-    r12_names = set(_ent._R12_POPULATION)
-    suite_r12_subset = round(sum(t for n, t in suite_times.items()
-                                 if n in r12_names), 3)
+    # round-over-round comparability: each round adds queries, so the
+    # all-queries total is not comparable across rounds. Each frozen
+    # round-N population is a WHITELIST (a blacklist of additions would
+    # silently absorb every later round's new queries).
+    subsets: dict[str, float] = {}
+    for r in range(3, 13):
+        names = _ent.frozen_population(r)
+        subsets[f"suite_r{r}_subset_sec"] = round(
+            sum(t for n, t in suite_times.items() if n in names), 3)
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     try:
         sf_val: float | str = float(sf)
@@ -147,18 +123,10 @@ def main() -> None:
         "unit": "sec",
         "queries": results,
         "full_suite_sec": round(suite_total, 3),
-        "full_suite_queries": suite_n,
+        "full_suite_queries": len(suite_times) - len(failed),
+        "full_suite_failed": failed,
         "full_suite_slowest": slowest,
-        "suite_r3_subset_sec": suite_r3_subset,
-        "suite_r4_subset_sec": suite_r4_subset,
-        "suite_r5_subset_sec": suite_r5_subset,
-        "suite_r6_subset_sec": suite_r6_subset,
-        "suite_r7_subset_sec": suite_r7_subset,
-        "suite_r8_subset_sec": suite_r8_subset,
-        "suite_r9_subset_sec": suite_r9_subset,
-        "suite_r10_subset_sec": suite_r10_subset,
-        "suite_r11_subset_sec": suite_r11_subset,
-        "suite_r12_subset_sec": suite_r12_subset,
+        **subsets,
         "sf": sf_val,
     }))
 

@@ -263,7 +263,9 @@ def _unpack_block(ids_cell, flat_cell, dim_cell):
 
     ids = np.asarray(ids_cell, dtype=np.int64)
     flat = np.asarray(flat_cell, dtype=np.float64)
-    dim = int(dim_cell)
+    # an all-null block's max(size(v)) is -1, or null under ANSI (pandas
+    # hands it over as None/NaN): map null to -1 so it fails as a desync
+    dim = -1 if dim_cell is None or dim_cell != dim_cell else int(dim_cell)
     if ids.size == 0 or flat.size != ids.size * dim:
         raise ValueError(
             f"block desync: {ids.size} ids x dim {dim} vs {flat.size} "

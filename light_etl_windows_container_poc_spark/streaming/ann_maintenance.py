@@ -38,6 +38,26 @@ def _marker_path(index_path: str, batch_id: int) -> str:
     return os.path.join(index_path, APPLIED_SUBDIR, f"batch_{batch_id}")
 
 
+# what `load_ivfpq_quantizers` reads; anchors/ exists for residual
+# indexes only
+_QUANTIZER_ARTIFACTS = ("centroids", "books", "anchors", "_ivfpq_meta.json")
+
+
+def _quantizer_generation(index_path: str) -> tuple:
+    """(st_ino, st_mtime_ns) of the index directory's inode and of each
+    quantizer artifact (None when absent)."""
+    def ident(path: str) -> tuple[int, int] | None:
+        try:
+            st = os.stat(path)
+        except FileNotFoundError:
+            return None
+        return st.st_ino, st.st_mtime_ns
+
+    return (os.stat(index_path).st_ino,
+            *(ident(os.path.join(index_path, a))
+              for a in _QUANTIZER_ARTIFACTS))
+
+
 def ann_append_batch_handler(index_path: str, id_col: str = "vec_id",
                              vec_col: str = "embedding",
                              ) -> Callable[[DataFrame, int], None]:
@@ -47,29 +67,22 @@ def ann_append_batch_handler(index_path: str, id_col: str = "vec_id",
     The frozen quantizers (centroids/books/anchors) are loaded ONCE and
     reused across micro-batches (guide §4.5 — heavyweight init per task,
     not per batch; they are by contract immutable between refreshes).
-    Cache key = the index DIRECTORY's (st_ino, st_mtime_ns): every
-    refresh/rebuild swaps a freshly-created staging dir into
-    ``index_path`` via rename (`_swap_in`), which changes both, so a
-    maintainer running across a refresh reloads the NEW quantizers on
-    its next batch instead of encoding against stale ones."""
+    Cache key = `_quantizer_generation`: the artifacts the loader reads,
+    plus the index directory's inode. Every refresh/rebuild swaps a
+    freshly-created staging dir into ``index_path`` via rename
+    (`_swap_in`), so a maintainer running across a refresh reloads the
+    NEW quantizers on its next batch instead of encoding against stale
+    ones; code appends, tombstones and markers leave the key alone."""
     from ..operators.ann_index import (append_to_ivfpq_index,
                                        load_ivfpq_quantizers)
 
     cache: dict = {}
-    # creating _applied_batches/ lazily on the first marker would bump
-    # index_path's mtime and force one spurious quantizer reload on the
-    # next batch — create it up front (the index itself must already
-    # exist; a missing index still fails fast in the first append)
-    if os.path.isdir(index_path):
-        os.makedirs(os.path.join(index_path, APPLIED_SUBDIR),
-                    exist_ok=True)
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         marker = _marker_path(index_path, batch_id)
         if os.path.exists(marker):
             return  # clean replay of an applied batch — skip
-        st = os.stat(index_path)
-        gen = (st.st_ino, st.st_mtime_ns)
+        gen = _quantizer_generation(index_path)
         if cache.get("gen") != gen:
             cache["q"] = load_ivfpq_quantizers(batch.sparkSession,
                                                index_path)

@@ -264,3 +264,41 @@ def test_drift_monitor_triggers_and_resets(spark, sf_dir, tmp_path):
     record_drift_baseline(full, "vec_id", "embedding", idx)
     cleared = drift_check(full, "vec_id", "embedding", idx)
     assert not cleared["needs_refresh"], cleared
+
+
+def test_quantizer_cache_survives_tombstones_reloads_on_refresh(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """The handler's quantizer cache keys on what the loader reads: the
+    first marker directory and a tombstone write between batches are no
+    reason to reload; a refresh swap is, exactly once."""
+    from light_etl_windows_container_poc_spark.operators import ann_index
+
+    emb = _emb(spark, sf_dir)
+    idx = str(tmp_path / "ivfpq")
+    build_ivfpq_index(emb.filter(F.col("vec_id") < 200), "vec_id",
+                      "embedding", idx, n_clusters=4)
+    loads = []
+    real_load = ann_index.load_ivfpq_quantizers
+
+    def counting_load(spark_, path):
+        loads.append(path)
+        return real_load(spark_, path)
+
+    monkeypatch.setattr(ann_index, "load_ivfpq_quantizers", counting_load)
+    handler = ann_append_batch_handler(idx)
+
+    def batch(lo, hi):
+        return emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
+
+    handler(batch(200, 220), 0)
+    ann_index.tombstone_ann_ids(
+        spark.createDataFrame([(5,)], "vec_id long"), "vec_id", idx)
+    handler(batch(220, 240), 1)
+    assert len(loads) == 1
+
+    ann_index.refresh_ivfpq_index(emb.filter(F.col("vec_id") < 240),
+                                  "vec_id", "embedding", idx, n_clusters=4)
+    handler(batch(240, 260), 2)
+    handler(batch(260, 280), 3)
+    assert len(loads) == 2
+    assert spark.read.parquet(os.path.join(idx, "codes")).count() == 280

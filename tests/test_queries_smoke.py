@@ -69,49 +69,55 @@ def test_survey_inventory_matches_registry():
 
 
 def test_certification_budget_is_exactly_allocated():
-    """The driver certifies ~50 queries per round: never-certified rows
-    plus the recertify list must fill that budget exactly — a drifted
-    allocation silently ages out rows or wastes slots."""
+    """The driver certifies the first 50 queries per round. Those 50 are
+    the never-certified rows, then _PINNED, then the stalest rows by
+    latest certified round (name breaks ties); every pinned row must fit
+    in the sample, or it escapes certification for another round."""
     import __spark_entry__ as ent
 
-    certified = set().union(ent._R01_CERTIFIED, ent._R02_CERTIFIED,
-                            ent._R03_CERTIFIED, ent._R04_CERTIFIED,
-                            ent._R05_CERTIFIED, ent._R06_CERTIFIED,
-                            ent._R07_CERTIFIED, ent._R08_CERTIFIED,
-                            ent._R09_CERTIFIED, ent._R10_CERTIFIED,
-                            ent._R11_CERTIFIED, ent._R12_CERTIFIED,
-                            ent._R13_CERTIFIED, ent._R14_CERTIFIED)
-    head = [n for n in QUERIES if n not in certified]
-    assert len(head) + len(ent._RECERTIFY) == 50, (
-        f"head={len(head)} + recertify={len(ent._RECERTIFY)} != 50 — "
-        "rebalance _RECERTIFY when adding queries")
-    # ordering contract: the never-certified head runs first
+    table = ent._CERTIFICATION
+    assert set(table) == set(QUERIES), "one _CERTIFICATION row per query"
+    never = sorted(n for n, (_, cert) in table.items() if not cert)
+    stalest = sorted((n for n in table if n not in never
+                      and n not in ent._PINNED),
+                     key=lambda n: (table[n][1], n))
+    assert set(ent._PINNED) <= set(table)
+    assert len(never) + len(ent._PINNED) <= 50
     ordered = list(ent.queries())
-    assert ordered[:len(head)] == head
+    assert ordered == [*never, *ent._PINNED, *stalest]
+
+
+def test_r16_allocation():
+    """The r16 driver sample: the ten r15-touched queries that missed the
+    r15 sample, then the 17 r9-latest rows r15 had no slots for, then
+    the stalest r10 rows up to 50."""
+    import __spark_entry__ as ent
+
+    ordered = list(ent.queries())
+    assert ordered[:10] == ent._PINNED == [
+        "ann_append_cert", "ann_takedown_cert", "cc_star_components",
+        "curate_corpus_v2", "stream_ams_cert", "countmin_sketch",
+        "cm_join_size", "knn_graph", "ann_ivf_fullprobe_exact",
+        "dedup_embedding_blocked"]
+    assert ordered[10:27] == [
+        "seasonality_dft", "session_window_agg",
+        "sketch_approx_percentile", "sketch_hll_mergeable", "skew_profile",
+        "stream_dq_gate_cert", "stream_hll_cert", "text_bigram_lm",
+        "text_rarity", "text_repetition", "theil_u_dow_type", "time_rollup",
+        "window_moving_avg", "window_range_value", "window_share",
+        "zipf_slope", "zscore_outliers"]
+    assert {ent._CERTIFICATION[n][1] for n in ordered[27:50]} == {10}
 
 
 def test_frozen_r5_population_is_subset_of_registry():
-    """The r5 bench tripwire list must stay valid as rounds add queries
-    (frozen names never leave the registry; new names never join the
-    frozen list)."""
+    """bench.py's suite_rN_subset_sec tripwires sum frozen populations:
+    their sizes must never change as rounds add queries (frozen names
+    never leave the registry; new names never join a frozen round)."""
     import __spark_entry__ as ent
 
-    assert set(ent._R05_POPULATION) <= set(QUERIES)
-    assert len(ent._R05_POPULATION) == 201
-    assert set(ent._R06_POPULATION) <= set(QUERIES)
-    assert len(ent._R06_POPULATION) == 210
-    assert set(ent._R07_POPULATION) <= set(QUERIES)
-    assert len(ent._R07_POPULATION) == 218
-    assert set(ent._R08_POPULATION) <= set(QUERIES)
-    assert len(ent._R08_POPULATION) == 237
-    assert set(ent._R09_POPULATION) <= set(QUERIES)
-    assert len(ent._R09_POPULATION) == 260
-    assert set(ent._R10_POPULATION) <= set(QUERIES)
-    assert len(ent._R10_POPULATION) == 273
-    assert set(ent._R11_POPULATION) <= set(QUERIES)
-    assert len(ent._R11_POPULATION) == 296
-    assert set(ent._R12_POPULATION) <= set(QUERIES)
-    assert len(ent._R12_POPULATION) == 308
+    sizes = [len(ent.frozen_population(r)) for r in range(3, 13)]
+    assert sizes == [141, 160, 201, 210, 218, 237, 260, 273, 296, 308]
+    assert ent.frozen_population(12) <= set(QUERIES)
 
 
 def test_q11_nonempty_at_realistic_sf(spark):

@@ -80,6 +80,18 @@ def test_pack_blocks_null_vector_raises(spark):
         _unpack_block(packed["ids"], packed["flat"], packed["dim"])
 
 
+@pytest.mark.parametrize("dim", [None, float("nan")])
+def test_unpack_all_null_block_is_a_desync(dim):
+    """Under ANSI, an all-null block's max(size(v)) is null, not -1:
+    pure Python, no Spark. It must raise the documented desync
+    ValueError, not a TypeError from int(None)."""
+    from light_etl_windows_container_poc_spark.operators.similarity import \
+        _unpack_block
+
+    with pytest.raises(ValueError, match="desync"):
+        _unpack_block([1, 2], [], dim)
+
+
 def test_pack_blocks_dim_roundtrip(spark):
     """Clean blocks unpack to the exact (ids, matrix) pair."""
     import numpy as np

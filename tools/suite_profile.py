@@ -5,7 +5,8 @@ Usage:
                                   [--only a,b] [--repeat N]
 
 Prints every query's wall time sorted descending plus the total, and
-optionally writes the raw dict as JSON. For A/B attribution, run it
+optionally writes the raw dict as JSON, with the names of queries that
+raised under "failed" (their times are not successes). For A/B attribution, run it
 twice — e.g. from a scratch worktree at an older commit vs HEAD on the
 same warehouse (the round-4 regression attribution in SURVEY §6 was
 produced exactly that way) — and diff the two JSON outputs.
@@ -40,6 +41,7 @@ def main() -> None:
     if args.only:
         names = [n for n in args.only.split(",") if n in QUERIES]
     times: dict[str, float] = {}
+    failed: set[str] = set()
     t_start = time.time()
     for name in names:
         fn = QUERIES[name]
@@ -50,6 +52,7 @@ def main() -> None:
                 fn(spark, args.sf_dir).collect()
             except Exception as exc:  # profile must finish
                 print(f"ERROR {name}: {exc}", file=sys.stderr)
+                failed.add(name)
             dt = time.time() - q0
             best = dt if best is None else min(best, dt)
             spark.catalog.clearCache()
@@ -57,10 +60,12 @@ def main() -> None:
     total = time.time() - t_start
     for name, dt in sorted(times.items(), key=lambda kv: kv[1], reverse=True):
         print(f"{dt:8.3f}  {name}")
-    print(f"{total:8.3f}  TOTAL ({len(times)} queries)")
+    print(f"{total:8.3f}  TOTAL ({len(times)} queries, "
+          f"{len(failed)} failed)")
     if args.out:
         with open(args.out, "w") as fh:
-            json.dump({"total": round(total, 3), "times": times}, fh, indent=1)
+            json.dump({"total": round(total, 3), "times": times,
+                       "failed": sorted(failed)}, fh, indent=1)
 
 
 if __name__ == "__main__":
