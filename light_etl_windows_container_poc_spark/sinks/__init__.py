@@ -14,7 +14,9 @@ import os
 import threading
 import time
 
-from pyspark.sql import DataFrame, Row, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import InheritableThread
 
 # Concurrent appends to ONE parquet directory are unsafe under Hadoop's
 # FileOutputCommitter: every job stages under `<dir>/_temporary/0/`, and
@@ -69,19 +71,85 @@ def append_table(df: DataFrame, warehouse_dir: str, table: str,
     return path
 
 
+def append_tables(spark: SparkSession, warehouse_dir: str,
+                  frames: dict[str, DataFrame],
+                  ) -> dict[str, tuple[float, Exception | None]]:
+    """Append each ``frames[table]`` to its warehouse table, one driver
+    thread per table, and wait for all of them. Returns, per table, the
+    append's seconds and the exception it raised (``None`` on success):
+    one failing table never stops the others.
+
+    The threads are ``pyspark.util.InheritableThread``s given the session:
+    under PySpark's default pinned-thread mode every append job keeps the
+    caller's job group, description and ``sql.streaming.queryId``; with
+    the mode off they run as plain threads. Same-path appends still
+    serialize on ``_path_lock``; distinct tables commit concurrently."""
+    out: dict[str, tuple[float, Exception | None]] = {}
+
+    def run(table: str, df: DataFrame) -> None:
+        t0 = time.time()
+        err = None
+        try:
+            append_table(df, warehouse_dir, table)
+        except Exception as e:  # reported per table, never raised here
+            err = e
+        out[table] = (time.time() - t0, err)
+
+    # each thread copies the caller's local properties when it starts, so
+    # concurrent jobs never share one mutable property set
+    threads = [InheritableThread(run, args=(table, df), session=spark)
+               for table, df in frames.items()]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    return out
+
+
+PROCESSING_LOG_TABLE = "etl_processing_log"
+# reference `database_postgres.py:71-83`; the batch pipeline, the Excel
+# stream and the quarantine path all append this exact schema, so the
+# table never holds mixed parquet footers
+PROCESSING_LOG_DDL = ("filename string, sheet_name string, "
+                      "rows_processed bigint, status string, "
+                      "error_message string, processed_at string, "
+                      "processing_time_seconds double")
+_LOG_COLUMNS = [c.split()[0] for c in PROCESSING_LOG_DDL.split(", ")]
+
+
+def processing_log_row(filename: str, rows_processed: int, status: str,
+                       error_message: str | None = None,
+                       processing_time_seconds: float = 0.0,
+                       sheet_name: str = "") -> tuple:
+    """One `etl_processing_log` row, in ``PROCESSING_LOG_DDL`` order."""
+    return (filename, sheet_name, int(rows_processed), status,
+            (error_message or "")[:1000],
+            time.strftime("%Y-%m-%d %H:%M:%S"),
+            float(processing_time_seconds))
+
+
+def append_processing_log(spark: SparkSession, warehouse_dir: str,
+                          rows: list[tuple]) -> None:
+    """Append ``rows`` (``processing_log_row`` tuples) in ONE job. The
+    frame is built from pandas, so it plans as a ``LocalTableScan``
+    instead of a Python-serialized ``parallelize``; a 7-row append costs
+    the same as a 1-row one. No rows, no job."""
+    if not rows:
+        return
+    log = spark.createDataFrame(pd.DataFrame(rows, columns=_LOG_COLUMNS),
+                                PROCESSING_LOG_DDL)
+    append_table(log, warehouse_dir, PROCESSING_LOG_TABLE)
+
+
 def write_processing_log(spark: SparkSession, warehouse_dir: str,
                          filename: str, rows_processed: int, status: str,
                          error_message: str | None = None,
                          processing_time_seconds: float = 0.0,
                          sheet_name: str = "") -> None:
-    """`etl_processing_log` parity (reference `database_postgres.py:71-83`)."""
-    log = spark.createDataFrame([Row(
-        filename=filename, sheet_name=sheet_name,
-        rows_processed=rows_processed, status=status,
-        error_message=(error_message or "")[:1000],
-        processed_at=time.strftime("%Y-%m-%d %H:%M:%S"),
-        processing_time_seconds=float(processing_time_seconds))])
-    append_table(log, warehouse_dir, "etl_processing_log")
+    """One-row `etl_processing_log` append (the quarantine event)."""
+    append_processing_log(spark, warehouse_dir, [processing_log_row(
+        filename, rows_processed, status, error_message,
+        processing_time_seconds, sheet_name)])
 
 
 def write_jdbc(df: DataFrame, url: str, table: str,

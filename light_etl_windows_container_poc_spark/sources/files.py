@@ -14,6 +14,7 @@ from __future__ import annotations
 import io
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,7 +32,13 @@ def _coerce_to_field(s: "pd.Series", fld) -> "pd.Series":
 
     t = fld.dataType
     if isinstance(t, T.StringType):
-        return s.map(lambda v: None if pd.isna(v) else str(v))
+        # the strings of s.map(lambda v: None if pd.isna(v) else str(v)):
+        # one vectorised null mask, then str() on the kept values only
+        keep = s.notna().to_numpy()
+        out = np.full(len(s), None, dtype=object)
+        out[keep] = np.array([str(v) for v in s.to_numpy(dtype=object)[keep]],
+                             dtype=object)
+        return pd.Series(out, index=s.index)
     if isinstance(t, (T.DoubleType, T.FloatType)):
         return pd.to_numeric(s, errors="coerce")
     if isinstance(t, (T.LongType, T.IntegerType, T.ShortType)):

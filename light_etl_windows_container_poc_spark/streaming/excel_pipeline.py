@@ -10,9 +10,11 @@ checkpoint replaces the watcher's seen-file bookkeeping
 (`pattern_based_cleaner_watcher.py:239-314`).
 
 Per micro-batch, the parsed corpus is routed+cleaned ONCE (persisted),
-per-table appends re-read that cache, and the processing-log rows are
-derived from one row-count aggregation — the batch pipeline's
-single-parse scale contract, preserved under streaming.
+the per-table appends run concurrently off that cache, and the
+processing-log rows are derived from one row-count aggregation and land
+in ONE append — the batch pipeline's single-parse scale contract and
+sink shape, preserved under streaming. If any table's append raises,
+the others still finish, then the micro-batch fails without a log row.
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..operators.cleaning import (coerce_by_name, drop_empty_rows,
                                   sanitize_column_names, with_etl_metadata)
 from ..operators.routing import PatternRouter
-from ..sinks import append_table
+from ..sinks import append_processing_log, append_tables, processing_log_row
 
 
 def excel_etl_batch_handler(warehouse_dir: str,
@@ -36,9 +38,9 @@ def excel_etl_batch_handler(warehouse_dir: str,
                             source_name: str = "excel_stream",
                             ) -> Callable[[DataFrame, int], None]:
     """foreachBatch function: route on source_path → sanitize/coerce/
-    drop-empty/enrich in one plan → append each routed table → append
-    per-file processing-log rows (reference `etl_processing_log`,
-    `database_postgres.py:71-83`)."""
+    drop-empty/enrich in one plan → append the routed tables concurrently
+    → append the per-file processing-log rows in one job (reference
+    `etl_processing_log`, `database_postgres.py:71-83`)."""
     router = router or PatternRouter()
 
     def handle(batch: DataFrame, batch_id: int) -> None:
@@ -60,29 +62,21 @@ def excel_etl_batch_handler(warehouse_dir: str,
             per_file = (cleaned.groupBy("source_path", "target_table")
                         .agg(F.count(F.lit(1)).cast("long").alias("n"))
                         .collect())
-            for table in sorted({r["target_table"] for r in per_file}):
-                sub = (cleaned.filter(F.col("target_table") == table)
-                       .drop("target_table"))
-                append_table(sub, warehouse_dir, table)
-            if per_file:
-                # EXACTLY write_processing_log's 7-column schema: this
-                # table is shared with the batch pipeline, and a
-                # divergent column set would leave mixed parquet
-                # schemas under one dir (whichever footer wins the
-                # scan silently hides the other's columns). The micro-
-                # batch id lives in the streaming checkpoint/metrics,
-                # not here.
-                dt = time.time() - t0
-                spark = batch.sparkSession
-                log = spark.createDataFrame(
-                    [(r["source_path"], "", int(r["n"]), "completed", "",
-                      time.strftime("%Y-%m-%d %H:%M:%S"), float(dt))
-                     for r in per_file],
-                    "filename string, sheet_name string, "
-                    "rows_processed long, status string, "
-                    "error_message string, processed_at string, "
-                    "processing_time_seconds double")
-                append_table(log, warehouse_dir, "etl_processing_log")
+            spark = batch.sparkSession
+            outcomes = append_tables(spark, warehouse_dir, {
+                table: (cleaned.filter(F.col("target_table") == table)
+                        .drop("target_table"))
+                for table in {r["target_table"] for r in per_file}})
+            for table in sorted(outcomes):
+                if outcomes[table][1] is not None:
+                    raise outcomes[table][1]
+            # the micro-batch id lives in the streaming checkpoint/metrics,
+            # not in the log: its schema is shared with the batch pipeline
+            dt = time.time() - t0
+            append_processing_log(spark, warehouse_dir, [
+                processing_log_row(r["source_path"], r["n"], "completed",
+                                   processing_time_seconds=dt)
+                for r in per_file])
         finally:
             cleaned.unpersist()
 

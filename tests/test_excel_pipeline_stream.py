@@ -180,3 +180,36 @@ def test_append_lock_keys_on_physical_path_and_reaps(spark, tmp_path):
     append_table(df, str(alias), "t")
     assert spark.read.parquet(str(real / "t")).count() == 10
     assert not sinks._APPEND_LOCKS  # nothing leaked
+
+
+def test_failing_table_append_fails_the_batch_without_log(spark, tmp_path,
+                                                          monkeypatch):
+    """A micro-batch whose append raises for one table still lets the
+    other tables' appends finish, then fails the batch (so the stream
+    retries it from its checkpoint) and writes no log row for it."""
+    from light_etl_windows_container_poc_spark import sinks
+
+    drive = str(tmp_path / "drive")
+    wh = str(tmp_path / "warehouse")
+    _write_book(f"{drive}/customer_data/c.xlsx", {"S": [["v"], ["ana"]]})
+    _write_book(f"{drive}/sales_data/s.xlsx", {"S": [["v"], ["widget"]]})
+    real = sinks.append_table
+
+    def flaky(df, warehouse_dir, table, *a, **k):
+        if table == "fact_sales":
+            raise RuntimeError("disk full")
+        return real(df, warehouse_dir, table, *a, **k)
+
+    monkeypatch.setattr(sinks, "append_table", flaky)
+    q = start_excel_etl_stream(spark, drive, "v string", wh,
+                               str(tmp_path / "ckpt"),
+                               batch_ts="2024-06-01 00:00:00")
+    try:
+        q.awaitTermination(300)
+    except Exception:  # the failed micro-batch surfaces here
+        pass
+    assert q.exception() is not None
+    assert "disk full" in str(q.exception())
+    assert not os.path.exists(f"{wh}/etl_processing_log")
+    assert [r["v"] for r in
+            spark.read.parquet(f"{wh}/dim_customers").collect()] == ["ana"]

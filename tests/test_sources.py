@@ -172,3 +172,33 @@ def test_xlsx_sparse_rows_and_stray_bottom_cell(spark):
         '<row r="1"><c r="B1"><v>2</v></c></row>'
         '</sheetData></worksheet>')
     assert parse_xlsx_rows(dup) == [[1, 2]]  # merged, nothing lost
+
+
+def test_string_coercion_matches_per_value_str():
+    """The vectorised string branch of `_coerce_to_field` returns exactly
+    the strings of the per-value `str()` map it replaced."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    from light_etl_windows_container_poc_spark.sources.files import \
+        _coerce_to_field
+
+    def per_value(s):
+        return s.map(lambda v: None if pd.isna(v) else str(v))
+
+    fld = T.StructField("x", T.StringType())
+    cols = [
+        pd.Series([1e16, 0.1 + 0.2, np.nan, 1.0, -0.0, 1e-7, 123456789.123,
+                   10000001.0, np.inf]),
+        pd.Series([np.nan, np.nan]),
+        pd.Series([0, -5, 2**62, 10000001], dtype="int64"),
+        pd.Series([True, False, True]),
+        pd.Series(["abc", 1, 2.5, None, True, np.nan, "naïve café", pd.NA,
+                   "", 1e16], dtype=object),
+    ]
+    for s in cols:
+        got = _coerce_to_field(s, fld)
+        assert got.tolist() == per_value(s).tolist(), s.dtype
+        assert got.index.equals(s.index)
+        assert all(v is None or type(v) is str for v in got)
