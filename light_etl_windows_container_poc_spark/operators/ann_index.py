@@ -1,36 +1,50 @@
-"""Persistent IVF index: build once, query many.
+"""Persistent IVF-PQ index: build once, query many, maintain in place.
 
-`ann_ivf_topk` (operators/similarity.py) retrains its coarse quantizer
-per call — right for a one-shot query, wrong for the serving pattern
-where one corpus answers many query batches. This module persists the
-index:
+`ann_ivfpq_topk` (operators/similarity.py) trains its quantizers per
+call — right for a one-shot query, wrong for the serving pattern where
+one corpus answers many query batches and keeps growing. This module
+persists the index as one directory:
 
     index/
-      centroids/   k rows (cluster, centroid vector)
-      vectors/     the corpus (id, vector, norm), PARTITIONED BY cluster
+      centroids/            k rows (cluster, centroid vector): the
+                            coarse quantizer
+      books/                m·ksub rows (subspace, code, centroid
+                            array): the PQ codebooks
+      codes/                (n_id, codes array<int>) PARTITIONED BY
+                            cluster — 8 ints per vector
+      anchors/              residual indexes only: (cluster, mean of
+                            normalized members)
+      _ivfpq_meta.json      {"residual", "m", "ksub"}
+      _applied_batches/     the streaming maintainer's applied-batch
+                            markers
+      _tombstones/          takedown ids, anti-joined out of every scan
+      _drift_baseline.json  assign stats recorded after build/refresh
 
-Partitioning the vectors by cluster id is the scale move: a query
-probing ``nprobe`` of k clusters reads ONLY those directories —
+Partitioning the codes by cluster id is the scale move: a query probing
+``nprobe`` of k clusters reads ONLY those directories —
 `PartitionFilters` at the scan, verified by test — so query cost
-follows the probed fraction, not the corpus size. At 100 TB the same
-layout holds with more clusters (k scales with corpus size; directories
-stay file-count-bounded via the usual compaction).
+follows the probed fraction × 8 bytes/vector, not the corpus size. At
+100 TB the same layout holds with more clusters (k scales with corpus
+size; `compact_ivfpq_codes` keeps directories file-count-bounded).
 
-Determinism: training is `kmeans_lite` (seeded, deterministic); the
-index on disk makes every later query run reproducible by construction,
-because the centroids travel with it.
+One layout covers the degenerate configurations too: ``n_clusters=1``
+is a flat PQ index, and a re-rank covering every probed code
+(``rerank=1 << 30``) is an IVF index with exact re-scoring.
+
+Determinism: training is `kmeans_lite` plus a lowest-id-sample Lloyd
+(seeded, deterministic); the index on disk makes every later query
+reproducible by construction, because the quantizers travel with it.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import dot
-from .similarity import (_nprobe_clusters_expr, _prep, assign_nearest_cluster,
-                         kmeans_lite)
+from .similarity import _prep, assign_nearest_cluster, kmeans_lite
 
 
 def _swap_in(staging: str, live_path: str) -> None:
@@ -59,151 +73,6 @@ def load_centroids(spark: SparkSession,
             for r in cents.collect()]
 
 
-def build_ivf_index(corpus: DataFrame, id_col: str, vec_col: str,
-                    index_path: str, n_clusters: int = 8,
-                    train_sample_fraction: float | None = None) -> int:
-    """Train the quantizer, assign the corpus, persist both. Returns the
-    number of indexed vectors. One training pass + one map-only
-    assignment + one cluster-partitioned write.
-
-    Rebuilds are ATOMIC: both halves land in a staging directory next
-    to ``index_path`` and swap in with one same-filesystem rename — a
-    crash mid-build leaves the previous index serving (new centroids
-    paired with old cluster directories would silently return wrong
-    neighbors, since probe ids from one quantizer prune against the
-    other's layout)."""
-    import shutil
-    import tempfile
-
-    parent = os.path.dirname(os.path.abspath(index_path)) or "."
-    os.makedirs(parent, exist_ok=True)
-    staging = tempfile.mkdtemp(prefix=".ivf_staging_", dir=parent)
-    try:
-        cents = kmeans_lite(corpus, id_col, vec_col, k=n_clusters,
-                            sample_fraction=train_sample_fraction)
-        cents.write.parquet(os.path.join(staging, "centroids"))
-        centroids = [(int(r["cluster"]), [float(x) for x in r["cv"]])
-                     for r in cents.collect()]
-        c = _prep(corpus, id_col, vec_col, "n_id", "nv", "nn")
-        assigned = assign_nearest_cluster(c, "nv", centroids)
-        (assigned.write.partitionBy("cluster")
-         .parquet(os.path.join(staging, "vectors")))
-        n = assigned.sparkSession.read.parquet(
-            os.path.join(staging, "vectors")).count()
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    _swap_in(staging, index_path)
-    return n
-
-
-def query_ivf_index(spark: SparkSession, index_path: str,
-                    queries: DataFrame, id_col: str, vec_col: str,
-                    k: int = 5, nprobe: int = 3) -> DataFrame:
-    """Top-k neighbors for each query against the persisted index.
-
-    The probe set becomes an `isin` filter on the PARTITION column, so
-    the vectors scan prunes to the probed directories (nprobe/k of the
-    corpus); scoring then broadcasts the query batch into those
-    partitions. Returns (q_id, n_id, sim, rank)."""
-    centroids = load_centroids(spark, index_path)
-    q = _prep(queries, id_col, vec_col, "q_id", "qv", "nq")
-    q_probes = (q.withColumn(
-        "probes", _nprobe_clusters_expr(F.col("qv"), centroids, nprobe))
-        .select("q_id", "qv", "nq", F.explode("probes").alias("cluster")))
-    probe_ids = sorted({r["cluster"] for r in
-                        q_probes.select("cluster").distinct().collect()})
-    vectors = (spark.read.parquet(os.path.join(index_path, "vectors"))
-               .filter(F.col("cluster").isin(probe_ids)))
-    vectors = _without_tombstones(spark, index_path, vectors)
-    scored = (vectors.join(F.broadcast(q_probes), "cluster")
-              .filter(F.col("q_id") != F.col("n_id"))
-              .withColumn("sim", dot(F.col("qv"), F.col("nv"))
-                          / (F.col("nq") * F.col("nn"))))
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), "n_id")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "n_id", "sim", "rank"))
-
-
-# --------------------------------------------------------------------------
-# Persistent PQ index: codebooks + 8-int codes on disk — build once,
-# query many (the memory-tier sibling of the IVF index above).
-# --------------------------------------------------------------------------
-
-def build_pq_index(corpus: DataFrame, id_col: str, vec_col: str,
-                   index_path: str, m: int = 8, ksub: int = 16,
-                   sample_limit: int = 4096) -> int:
-    """Train sampled codebooks, encode the corpus map-only, persist
-    both halves atomically (same staging+rename contract as
-    `build_ivf_index` — codes decoded against the WRONG codebooks would
-    silently return wrong neighbors):
-
-        index/
-          books/   m·ksub rows (subspace, code, centroid array)
-          codes/   the corpus as (n_id, codes array<int>) — 8 ints/row,
-                   the 64× memory cut that makes the ADC scan RAM-sized
-
-    Returns the number of indexed vectors."""
-    import shutil
-    import tempfile
-
-    from .similarity import pq_encode, pq_train
-
-    parent = os.path.dirname(os.path.abspath(index_path)) or "."
-    os.makedirs(parent, exist_ok=True)
-    staging = tempfile.mkdtemp(prefix=".pq_staging_", dir=parent)
-    try:
-        books = pq_train(corpus, id_col, vec_col, m=m, ksub=ksub,
-                         sample_limit=sample_limit)
-        spark = corpus.sparkSession
-        rows = [(j, c, books[j][c]) for j in range(len(books))
-                for c in range(len(books[j]))]
-        (spark.createDataFrame(rows,
-                               "subspace int, code int, centroid array<double>")
-         .write.parquet(os.path.join(staging, "books")))
-        codes = pq_encode(corpus, id_col, vec_col, books)
-        codes.write.parquet(os.path.join(staging, "codes"))
-        n = spark.read.parquet(os.path.join(staging, "codes")).count()
-        _swap_in(staging, index_path)
-        return n
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-
-
-def append_to_ivf_index(batch: DataFrame, id_col: str, vec_col: str,
-                        index_path: str) -> int:
-    """Append a new batch to an EXISTING IVF index — the 100 TB serving
-    pattern (daily arrivals land in the index without re-reading or
-    re-clustering the corpus). Assignment uses the PERSISTED centroids
-    (map-only, one pass over the batch); rows append into the existing
-    cluster directories. Returns the number of appended vectors.
-
-    Atomicity: a multi-file parquet append is NOT atomic — a crash can
-    leave some of the batch's files visible. Queries stay correct
-    (extra rows are real vectors, never wrong neighbors, because the
-    quantizer is unchanged); replaying the batch would duplicate rows,
-    so replays need the `incremental_exact_dedup` batch-tag pattern or
-    an id-keyed compaction sweep. Recall drift: centroids age as the
-    corpus grows — appended vectors can land in a cluster whose
-    centroid no longer represents them, shaving nprobe<k recall (the
-    drift-bound test measures it); periodic `build_ivf_index` rebuilds
-    are the re-centering lever, and probe-all queries stay exact at
-    ANY drift."""
-    centroids = load_centroids(batch.sparkSession, index_path)
-    c = _prep(batch, id_col, vec_col, "n_id", "nv", "nn")
-    # one compute for the count + the write (guide §5), not two
-    assigned = assign_nearest_cluster(c, "nv", centroids).persist()
-    try:
-        n = assigned.count()
-        (assigned.write.partitionBy("cluster").mode("append")
-         .parquet(os.path.join(index_path, "vectors")))
-    finally:
-        assigned.unpersist()
-    return n
-
-
 def load_pq_books(spark: SparkSession,
                   index_path: str) -> list[list[list[float]]]:
     rows = (spark.read.parquet(os.path.join(index_path, "books"))
@@ -214,64 +83,6 @@ def load_pq_books(spark: SparkSession,
         books[r["subspace"]].append([float(x) for x in r["centroid"]])
     return books
 
-
-def query_pq_index(spark: SparkSession, index_path: str, corpus: DataFrame,
-                   queries: DataFrame, id_col: str, vec_col: str,
-                   k: int = 5, rerank: int = 128) -> DataFrame:
-    """ADC scan over the PERSISTED codes (the data-sized read is 8
-    ints/vector) + exact re-rank against the corpus vectors on the
-    candidate ids only. Identical results to `ann_pq_topk` with the same
-    codebooks — proven in tests — without re-training or re-encoding."""
-    import numpy as np
-
-    from ..session import ensure_package_on_executors
-    from .similarity import _l2_normalize_rows, _local_topt_ids
-
-    ensure_package_on_executors(spark)
-    books = load_pq_books(spark, index_path)
-    B = [np.array(b, dtype=np.float64) for b in books]
-    dsub = B[0].shape[1]
-    codes = _without_tombstones(
-        spark, index_path,
-        spark.read.parquet(os.path.join(index_path, "codes")))
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    qm = _l2_normalize_rows(np.array(
-        [[float(x) for x in r[1]] for r in q_rows], dtype=np.float64))
-    lut = np.stack([qm[:, j * dsub:(j + 1) * dsub] @ B[j].T
-                    for j in range(len(B))], axis=1)
-
-    def adc(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            cid = pdf["n_id"].to_numpy(dtype=np.int64)
-            sims = lut[:, np.arange(C.shape[1])[None, :], C].sum(axis=2)
-            sims[q_ids[:, None] == cid[None, :]] = -np.inf
-            t = min(rerank, sims.shape[1])
-            idx = _local_topt_ids(sims, cid, t)
-            vals = np.take_along_axis(sims, idx, axis=1).ravel()
-            keep = np.isfinite(vals)
-            yield pd.DataFrame({"q_id": np.repeat(q_ids, t)[keep],
-                                "n_id": cid[idx.ravel()][keep]})
-
-    cand = codes.mapInPandas(adc, "q_id long, n_id long")
-    from .similarity import exact_rerank_topk
-
-    return exact_rerank_topk(cand, corpus, queries, id_col, vec_col, k)
-
-
-# --------------------------------------------------------------------------
-# Persistent IVF-PQ index: the FAISS-standard serving layout — a coarse
-# quantizer prunes WHICH codes a query scans (cluster-partitioned
-# directories → PartitionFilters), PQ shrinks WHAT the scan reads
-# (8 ints/vector), the exact re-rank restores precision. The composed
-# tier the two indexes above exist to feed.
-# --------------------------------------------------------------------------
 
 def build_ivfpq_index(corpus: DataFrame, id_col: str, vec_col: str,
                       index_path: str, n_clusters: int = 8, m: int = 8,
@@ -295,8 +106,9 @@ def build_ivfpq_index(corpus: DataFrame, id_col: str, vec_col: str,
     serves every cluster — see `ann_ivfpq_topk`. Partitioning codes by
     cluster is what turns nprobe into PartitionFilters at the scan
     (plan-asserted in tests): query cost follows probed fraction ×
-    8 bytes/vector, the product of both tiers' savings. Same atomic
-    staging+rename contract as the other builders (a crash mid-build
+    8 bytes/vector, the product of both tiers' savings. Builds are
+    ATOMIC: every artifact lands in a staging directory next to
+    ``index_path`` and swaps in through `_swap_in` (a crash mid-build
     leaves the previous index serving — new centroids against old
     cluster directories would silently mis-prune).
 
@@ -401,30 +213,6 @@ def build_ivfpq_index(corpus: DataFrame, id_col: str, vec_col: str,
     return n
 
 
-def append_to_pq_index(batch: DataFrame, id_col: str, vec_col: str,
-                       index_path: str) -> int:
-    """Append a batch to an existing flat PQ index: encode with the
-    PERSISTED codebooks (map-only) and append to codes/. The codebooks
-    never change on append, so query-after-append equals a rebuild at
-    fixed books (tested); codebook drift mirrors the centroid-drift
-    story — quantization error grows if the data distribution moves,
-    the exact re-rank keeps returned sims true regardless. Same
-    non-atomic multi-file-append caveat as `append_to_ivf_index`."""
-    from .similarity import pq_encode
-
-    spark = batch.sparkSession
-    books = load_pq_books(spark, index_path)
-    # one compute for the count + the write (guide §5), not two
-    codes = pq_encode(batch, id_col, vec_col, books).persist()
-    try:
-        n = codes.count()
-        codes.write.mode("append").parquet(os.path.join(index_path,
-                                                        "codes"))
-    finally:
-        codes.unpersist()
-    return n
-
-
 def load_anchors(spark: SparkSession,
                  index_path: str) -> list[tuple[int, list[float]]]:
     """The persisted residual anchors (cluster → mean of normalized
@@ -468,9 +256,23 @@ def append_to_ivfpq_index(batch: DataFrame, id_col: str, vec_col: str,
     the PERSISTED quantizers (one map-only pass), append into the
     cluster directories. Query-after-append provably equals a rebuild
     at the same fixed centroids/books (tested), because neither
-    quantizer changes — only the code set grows. Same non-atomic-append
-    and recall-drift caveats as `append_to_ivf_index`; probe-all +
-    rerank ≥ corpus stays exact at any drift.
+    quantizer changes — only the code set grows. This is the 100 TB
+    serving pattern: daily arrivals land in the index without re-reading
+    or re-clustering the corpus. Returns the number of appended vectors.
+
+    Atomicity: a multi-file parquet append is NOT atomic — a crash can
+    leave some of the batch's files visible. Queries stay correct
+    (extra rows are real vectors, never wrong neighbors, because the
+    quantizers are unchanged), and a replayed batch's duplicate code
+    rows are result-safe through the candidate dedupe in the re-rank;
+    the streaming maintainer's applied-batch markers skip clean
+    replays, and `compact_ivfpq_codes` reclaims the duplicates' storage.
+    Recall drift: the quantizers age as the corpus grows — appended
+    vectors can land in a cluster whose centroid no longer represents
+    them, and codebook error grows if the distribution moves, shaving
+    nprobe<k recall (the append test's recall floor bounds it).
+    `drift_check` monitors it and `refresh_ivfpq_index` re-centers;
+    probe-all + rerank ≥ corpus stays exact at ANY drift.
 
     ``quantizers`` accepts a `load_ivfpq_quantizers` dict so repeated
     appends (the streaming maintainer) skip re-reading the frozen
@@ -515,11 +317,11 @@ def refresh_ivfpq_index(corpus: DataFrame, id_col: str, vec_col: str,
     Appends encode against FROZEN quantizers, so as the data
     distribution drifts the coarse partition and the codebooks go stale
     (recall at fixed nprobe degrades — the documented drift envelope in
-    the append docstrings). This rebuilds the WHOLE index — fresh
+    the append docstring). This rebuilds the WHOLE index — fresh
     k-means centroids, fresh PQ codebooks (and residual anchors when
     ``residual=True``), every vector re-assigned and re-encoded — into
     a staging directory and swaps it in with the same crash-safe
-    two-rename `_swap_in` the builders use: readers of the old index
+    two-rename `_swap_in` the build uses: readers of the old index
     stay correct for the entire rebuild, and a crash at any point
     leaves either the old or the new index fully serving (never
     mixed-generation quantizers/codes, never nothing).
@@ -638,14 +440,7 @@ def compact_ivfpq_codes(spark: SparkSession, index_path: str) -> int:
     except BaseException:
         shutil.rmtree(staging, ignore_errors=True)
         raise
-    # Same crash-safe ordering as build: old codes move ASIDE first, so
-    # every crash window leaves either the old or the new codes at
-    # codes_path ("codes.old" is a sibling dir no reader touches).
-    old = codes_path + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(codes_path, old)
-    os.replace(os.path.join(staging, "codes"), codes_path)
-    shutil.rmtree(old, ignore_errors=True)
+    _swap_in(os.path.join(staging, "codes"), codes_path)
     shutil.rmtree(staging, ignore_errors=True)
     return n
 

@@ -6,7 +6,7 @@ corpus-in/corpus-out; a production ingestion pipeline instead sees
 new-batch-vs-history: yesterday's 100 TB are already deduped and only
 today's arrivals must be checked, without re-reading the corpus. This
 module persists the dedup STATE as parquet tables under an index
-directory (the `scale_discovery` / `ann_ivf_index` state-table shape):
+directory (the `scale_discovery` / `ann_ivfpq` state-table shape):
 
 - ``exact/``  — (content_hash, keep_id): one row per kept document.
 - ``sigs/``   — (doc, sig array<bigint>): minhash signatures of KEPT docs.

@@ -1,61 +1,16 @@
-"""Persistent IVF index (`operators.ann_index`): build once / query
-many, with partition-pruned probes and degenerate-exhaustive exactness."""
+"""Persistent IVF-PQ index (`operators.ann_index`): build once / query
+many, with partition-pruned probes, degenerate-exhaustive exactness,
+append at fixed quantizers and residual codes."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from light_etl_windows_container_poc_spark.catalog import load_tables
-from light_etl_windows_container_poc_spark.operators.ann_index import (
-    build_ivf_index, query_ivf_index)
 from light_etl_windows_container_poc_spark.operators.similarity import \
     ann_bruteforce_topk
 from light_etl_windows_container_poc_spark.plans import formatted_plan
 
-
-def test_index_build_query_recall_and_pruning(spark, sf_dir, tmp_path):
-    emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    idx = str(tmp_path / "ivf")
-    n = build_ivf_index(emb, "vec_id", "embedding", idx, n_clusters=8)
-    assert n == emb.count()
-
-    queries = emb.filter(F.col("vec_id") < 5)
-    res = query_ivf_index(spark, idx, queries, "vec_id", "embedding",
-                          k=5, nprobe=3)
-    # partition pruning: the vectors scan must carry PartitionFilters on
-    # the cluster directory column
-    plan = formatted_plan(res)
-    assert "PartitionFilters" in plan and "cluster" in plan
-
-    rows = res.collect()
-    assert {r["q_id"] for r in rows} == {0, 1, 2, 3, 4}
-    assert all(1 <= r["rank"] <= 5 for r in rows)
-
-    # recall@5 vs brute force with a sane floor at nprobe=3/8
-    exact = ann_bruteforce_topk(emb, queries, "vec_id", "embedding", k=5)
-    truth = {(r["q_id"], r["n_id"]) for r in exact.collect()}
-    got = {(r["q_id"], r["n_id"]) for r in rows}
-    recall = len(got & truth) / len(truth)
-    assert recall >= 0.6, f"recall {recall}"
-
-
-def test_probe_all_clusters_equals_bruteforce(spark, sf_dir, tmp_path):
-    emb = (load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-           .filter(F.col("vec_id") < 300))
-    idx = str(tmp_path / "ivf_all")
-    build_ivf_index(emb, "vec_id", "embedding", idx, n_clusters=4)
-    queries = emb.filter(F.col("vec_id") < 3)
-    approx = query_ivf_index(spark, idx, queries, "vec_id", "embedding",
-                             k=4, nprobe=4)  # nprobe == k_clusters
-    exact = ann_bruteforce_topk(emb, queries, "vec_id", "embedding", k=4)
-    assert sorted((r["q_id"], r["n_id"], r["rank"])
-                  for r in approx.collect()) == \
-        sorted((r["q_id"], r["n_id"], r["rank"]) for r in exact.collect())
-
-
-# --------------------------------------------------------------------------
-# IVF-PQ: composed tier + append paths
-# --------------------------------------------------------------------------
 
 def _topk_set(df):
     return sorted((r["q_id"], r["n_id"], r["rank"]) for r in df.collect())
@@ -126,40 +81,6 @@ def test_ivfpq_probe_all_rerank_all_equals_bruteforce(spark, sf_dir,
     assert _topk_set(approx) == _topk_set(exact)
 
 
-def test_ivf_append_then_probe_all_is_exact_and_lands_in_partitions(
-        spark, sf_dir, tmp_path):
-    """Append a new batch to a built IVF index: rows must land in the
-    existing cluster directories (assignment against the PERSISTED
-    centroids) and a probe-all query over the grown index must equal
-    brute force over the grown corpus — exactness survives ANY
-    centroid drift; only partial-probe recall pays for it."""
-    from light_etl_windows_container_poc_spark.operators.ann_index import (
-        append_to_ivf_index, build_ivf_index, query_ivf_index)
-
-    emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    base = emb.filter(F.col("vec_id") < 250)
-    batch = emb.filter((F.col("vec_id") >= 250) & (F.col("vec_id") < 350))
-    grown = emb.filter(F.col("vec_id") < 350)
-    idx = str(tmp_path / "ivf_app")
-    build_ivf_index(base, "vec_id", "embedding", idx, n_clusters=4)
-    n = append_to_ivf_index(batch, "vec_id", "embedding", idx)
-    assert n == batch.count()
-    stored = spark.read.parquet(str(tmp_path / "ivf_app" / "vectors"))
-    assert stored.count() == grown.count()
-    assert stored.select("cluster").distinct().count() <= 4
-    queries = emb.filter(F.col("vec_id") < 3)
-    got = query_ivf_index(spark, idx, queries, "vec_id", "embedding",
-                          k=4, nprobe=4)
-    exact = ann_bruteforce_topk(grown, queries, "vec_id", "embedding", k=4)
-    assert _topk_set(got) == _topk_set(exact)
-    # drift bound: partial-probe recall on the grown index stays sane
-    part = query_ivf_index(spark, idx, queries, "vec_id", "embedding",
-                           k=4, nprobe=2)
-    truth = {(r["q_id"], r["n_id"]) for r in exact.collect()}
-    hits = {(r["q_id"], r["n_id"]) for r in part.collect()} & truth
-    assert len(hits) / len(truth) >= 0.5
-
-
 def test_ivfpq_append_equals_rebuild_at_fixed_quantizers(spark, sf_dir,
                                                          tmp_path):
     """query-after-append == query-after-rebuild when centroids AND
@@ -170,9 +91,13 @@ def test_ivfpq_append_equals_rebuild_at_fixed_quantizers(spark, sf_dir,
     per-Arrow-batch local top-t candidate sets legitimately depend on
     FILE LAYOUT (append vs rebuild lay codes out differently), which
     is the documented rerank-recall trade, not an append defect."""
+    import os
+
     from light_etl_windows_container_poc_spark.operators.ann_index import (
         append_to_ivfpq_index, build_ivfpq_index, load_centroids,
         load_pq_books, query_ivfpq_index)
+    from light_etl_windows_container_poc_spark.operators.similarity import \
+        pq_encode
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     base = emb.filter(F.col("vec_id") < 250)
@@ -184,6 +109,15 @@ def test_ivfpq_append_equals_rebuild_at_fixed_quantizers(spark, sf_dir,
     assert n == batch.count()
     cents = load_centroids(spark, idx_a)
     books = load_pq_books(spark, idx_a)
+    # appended rows land in the existing cluster directories, encoded
+    # with the PERSISTED codebooks
+    stored = spark.read.parquet(os.path.join(idx_a, "codes"))
+    assert stored.count() == grown.count()
+    assert stored.select("cluster").distinct().count() <= 4
+    want_codes = {r.n_id: list(r.codes)
+                  for r in pq_encode(grown, "vec_id", "embedding",
+                                     books).collect()}
+    assert {r.n_id: list(r.codes) for r in stored.collect()} == want_codes
     idx_b = str(tmp_path / "ivfpq_reb")
     build_ivfpq_index(grown, "vec_id", "embedding", idx_b,
                       centroids=cents, books=books)
@@ -195,6 +129,11 @@ def test_ivfpq_append_equals_rebuild_at_fixed_quantizers(spark, sf_dir,
                                 "embedding", k=4, nprobe=2,
                                 rerank=1 << 30)
     assert _topk_set(appended) == _topk_set(rebuilt)
+    # drift bound: partial-probe recall on the grown index stays sane
+    exact = ann_bruteforce_topk(grown, queries, "vec_id", "embedding", k=4)
+    truth = {(r["q_id"], r["n_id"]) for r in exact.collect()}
+    hits = {(r["q_id"], r["n_id"]) for r in appended.collect()} & truth
+    assert len(hits) / len(truth) >= 0.5
 
 
 def test_ivfpq_residual_probe_all_equals_bruteforce_and_recall(

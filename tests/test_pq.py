@@ -1,5 +1,6 @@
 """Product-quantization ANN: codebook determinism, encoding shape /
-compression, exactness at full rerank, and recall."""
+compression, exactness at full rerank, recall, and the persisted flat
+PQ index as a one-cluster IVF-PQ index."""
 
 from __future__ import annotations
 
@@ -63,70 +64,33 @@ def test_pq_recall_floor(spark, sf_dir):
     assert recall >= 0.6, recall
 
 
-def test_pq_index_build_query_roundtrip(spark, sf_dir, tmp_path):
-    """Persisted PQ index: build once, query twice; results equal the
-    direct ann_pq_topk path with the same codebooks (same sample, same
-    Lloyd) — re-training/re-encoding per query batch is gone."""
+def test_ivfpq_single_cluster_equals_flat_pq(spark, sf_dir, tmp_path):
+    """A one-cluster IVF-PQ index is the flat persisted PQ index: its
+    codebooks are `pq_train`'s (same sample, same Lloyd), and a query
+    against it equals the direct ann_pq_topk path at those codebooks.
+    Build once, query twice, with no re-training or re-encoding per
+    query batch."""
     from light_etl_windows_container_poc_spark.operators.ann_index import (
-        build_pq_index, query_pq_index)
+        build_ivfpq_index, load_pq_books, query_ivfpq_index)
 
     emb = _emb(spark, sf_dir)
     qs = emb.filter(F.col("vec_id") % 100 == 0)
     idx = str(tmp_path / "pq")
-    n = build_pq_index(emb, "vec_id", "embedding", idx, m=8, ksub=16)
+    n = build_ivfpq_index(emb, "vec_id", "embedding", idx, n_clusters=1,
+                          m=8, ksub=16)
     assert n == emb.count()
+    books = load_pq_books(spark, idx)
+    assert books == pq_train(emb, "vec_id", "embedding", m=8, ksub=16)
     got = {(r.q_id, r.rank): r.n_id
-           for r in query_pq_index(spark, idx, emb, qs, "vec_id",
-                                   "embedding", k=5, rerank=128).collect()}
+           for r in query_ivfpq_index(spark, idx, emb, qs, "vec_id",
+                                      "embedding", k=5, nprobe=1,
+                                      rerank=128).collect()}
     direct = {(r.q_id, r.rank): r.n_id
               for r in ann_pq_topk(emb, qs, "vec_id", "embedding", k=5,
-                                   rerank=128).collect()}
+                                   rerank=128, books=books).collect()}
     assert got == direct and got
     # second query batch against the same on-disk index
     qs2 = emb.filter(F.col("vec_id") % 170 == 0)
-    again = query_pq_index(spark, idx, emb, qs2, "vec_id", "embedding",
-                           k=3, rerank=128).collect()
+    again = query_ivfpq_index(spark, idx, emb, qs2, "vec_id", "embedding",
+                              k=3, nprobe=1, rerank=128).collect()
     assert len(again) == qs2.count() * 3
-
-
-def test_pq_index_append_equals_rebuild_at_fixed_books(spark, sf_dir,
-                                                       tmp_path):
-    """Codebooks never change on append, so query-after-append must
-    equal a rebuild over the grown corpus encoded with the SAME books.
-    Compared at rerank ≥ corpus: below that, per-batch local top-t
-    candidate sets depend on file layout (append vs rebuild lay codes
-    out differently) — the documented rerank-recall trade."""
-    from light_etl_windows_container_poc_spark.operators.ann_index import (
-        append_to_pq_index, build_pq_index, load_pq_books, query_pq_index)
-    from light_etl_windows_container_poc_spark.operators.similarity import \
-        pq_encode
-
-    emb = _emb(spark, sf_dir)
-    base = emb.filter(F.col("vec_id") < 250)
-    batch = emb.filter((F.col("vec_id") >= 250) & (F.col("vec_id") < 350))
-    grown = emb.filter(F.col("vec_id") < 350)
-    idx = str(tmp_path / "pq_app")
-    build_pq_index(base, "vec_id", "embedding", idx, m=8, ksub=16)
-    n = append_to_pq_index(batch, "vec_id", "embedding", idx)
-    assert n == batch.count()
-    books = load_pq_books(spark, idx)
-    # the appended codes must equal a fixed-books re-encode of the batch
-    import os
-
-    stored = spark.read.parquet(os.path.join(idx, "codes"))
-    assert stored.count() == grown.count()
-    want_codes = {r.n_id: list(r.codes)
-                  for r in pq_encode(grown, "vec_id", "embedding",
-                                     books).collect()}
-    got_codes = {r.n_id: list(r.codes) for r in stored.collect()}
-    assert got_codes == want_codes
-    qs = emb.filter(F.col("vec_id") < 3)
-    got = sorted((r.q_id, r.n_id, r.rank)
-                 for r in query_pq_index(spark, idx, grown, qs, "vec_id",
-                                         "embedding", k=4,
-                                         rerank=1 << 30).collect())
-    direct = sorted((r.q_id, r.n_id, r.rank)
-                    for r in ann_pq_topk(grown, qs, "vec_id", "embedding",
-                                         k=4, rerank=1 << 30,
-                                         books=books).collect())
-    assert got == direct and got
