@@ -19,7 +19,7 @@ Four escalating strategies, each with the join/shuffle shape that survives
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.texts import (minhash_signature, shingle_hashes,
@@ -90,10 +90,13 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
         # bounded-buffer path: the hot set (df > max_df) is tiny by
         # construction — broadcast the anti-join so the shingle stream is
         # filtered map-side before the group. The stream feeds TWO passes
-        # (df count + the group) — persist the compact (doc, s-hash)
-        # relation so the text scan + shingle explode + hash run once,
-        # not once per pass (guide §5; 16 bytes/row, disk-spillable)
-        sh = sh.persist()
+        # (df count + the group) — lazily checkpoint the compact
+        # (doc, s-hash) relation so the text scan + shingle explode + hash
+        # run once, not once per pass (guide §5; 16 bytes/row,
+        # disk-spillable). A checkpoint, not persist(): the result is
+        # returned lazily, and the ContextCleaner reclaims the blocks once
+        # it is unreferenced, where a cache entry would outlive the query
+        sh = sh.localCheckpoint(eager=False)
         hot = (sh.groupBy("s").agg(F.count(F.lit(1)).alias("df_"))
                .filter(F.col("df_") > max_df).select("s"))
         sh = sh.join(F.broadcast(hot), "s", "left_anti")
@@ -181,7 +184,10 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
             .select(F.col(id_col).alias("doc"),
                     minhash_signature(F.col(text_col), num_hashes, n, seed)
                     .alias("sig")))
-    sigs = sigs.persist()  # reused: banding + per-pair verification
+    # reused: banding + per-pair verification; lazily checkpointed (not
+    # persisted) because the pairs are returned lazily, with no point at
+    # which this function could unpersist
+    sigs = sigs.localCheckpoint(eager=False)
     cand = minhash_band_candidates(sigs, bands, rows)
     sig_a = sigs.select(F.col("doc").alias("a_id"), F.col("sig").alias("sig_a"))
     sig_b = sigs.select(F.col("doc").alias("b_id"), F.col("sig").alias("sig_b"))
@@ -279,50 +285,62 @@ def connected_components_stats(pairs: DataFrame,
     converge, so non-convergence raises instead of returning silently
     split components. (If long chains are expected, switch to
     large-star/small-star pointer doubling for O(log diameter).)
-    Each round is one shuffle on node id; lineage is cut with
-    localCheckpoint so plans stay bounded — the standard Spark shape for
-    iterative graph algorithms without GraphX.
+
+    Each round is ONE aggregate and ONE action. The candidates are every
+    neighbor's label (``own`` NULL) plus the node's current label
+    (``own`` = label); one ``groupBy(node)`` yields the new label
+    ``min(label)`` and the old one ``max(own)``, and since labels only
+    decrease, ``changed = label < own`` is exactly "the label moved". The
+    round's ``max(changed)`` is observed (``Observation``) on the eager
+    ``localCheckpoint`` that cuts lineage, so the checkpoint's count is
+    the round's only action and also yields the convergence flag; no
+    second join is planned to compare old and new labels. Traced
+    `entity_resolution` (sf0.01, 4 rounds): 56 → 25 jobs per query. The
+    edge list comes from ONE read of ``pairs`` (a two-row explode, where
+    a union would plan the pair join twice) and is persisted for the call
+    only.
     """
-    edges = (pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-             .union(pairs.select(F.col("b_id").alias("src"),
-                                 F.col("a_id").alias("dst"))))
-    edges = edges.persist()
-    labels = (edges.select(F.col("src").alias("node")).distinct()
-              .withColumn("label", F.col("node")))
-    converged = False
-    rounds_used = 0
-    for _ in range(max_iterations):
-        rounds_used += 1
-        neighbor_min = (edges.join(labels, edges.dst == labels.node)
-                        .groupBy("src").agg(F.min("label").alias("nmin")))
-        new_labels = (labels.join(neighbor_min, labels.node == neighbor_min.src,
-                                  "left")
-                      .select(F.col("node"),
-                              F.least(F.col("label"),
-                                      F.coalesce(F.col("nmin"), F.col("label")))
-                              .alias("label")))
-        # lazy checkpoint: the convergence count below is the round's ONE
-        # action and materializes it — eager=True ran a second full job
-        # per round just to fill the checkpoint (measured 2 jobs/round)
-        new_labels = new_labels.localCheckpoint(eager=False)
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "node")
-                   .filter(F.col("n.label") != F.col("o.label")).limit(1).count())
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    # the returned labels are already materialized (the convergence count
-    # is an action on the lazily-checkpointed relation), so the edge cache
-    # can be released here — nothing pins it past the call
-    edges.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "iterations; components would be silently split. Raise "
-            "max_iterations (component diameter exceeds it).")
-    return (labels.select(F.col("node"), F.col("label").alias("component")),
-            rounds_used)
+    edges = (pairs.select(F.explode(F.array(
+        F.struct(F.col("a_id").alias("src"), F.col("b_id").alias("dst")),
+        F.struct(F.col("b_id").alias("src"), F.col("a_id").alias("dst"))))
+        .alias("e")).select("e.src", "e.dst")).persist()
+    try:
+        # round 1's inputs: every node's label is still the node itself,
+        # so the neighbor labels are the edges as they are and no join or
+        # distinct node list is needed (duplicate candidate rows cannot
+        # change a min or a max)
+        nbr = edges.select(F.col("src").alias("node"),
+                           F.col("dst").alias("label"))
+        cur = edges.select(F.col("src").alias("node"),
+                           F.col("src").alias("label"))
+        for rounds_used in range(1, max_iterations + 1):
+            cand = (nbr.select("node", "label", F.lit(None).alias("own"))
+                    .union(cur.select("node", "label",
+                                      F.col("label").alias("own"))))
+            step = (cand.groupBy("node")
+                    .agg(F.min("label").alias("label"),
+                         F.max("own").alias("own"))
+                    .withColumn("changed", F.col("label") < F.col("own")))
+            moved = Observation()
+            labels = (step.observe(moved, F.max("changed").alias("any"))
+                      .select("node", "label")
+                      .localCheckpoint(eager=True))
+            # NULL on an empty graph: nothing moved, so it has converged
+            if not moved.get["any"]:
+                return (labels.select(F.col("node"),
+                                      F.col("label").alias("component")),
+                        rounds_used)
+            nbr = (edges.join(labels, edges.dst == labels.node)
+                   .select(F.col("src").alias("node"), "label"))
+            cur = labels
+    finally:
+        # the returned labels are materialized by the eager checkpoint, so
+        # the edge cache is released on every exit, a raise included
+        edges.unpersist()
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iterations} "
+        "iterations; components would be silently split. Raise "
+        "max_iterations (component diameter exceeds it).")
 
 
 def dedup_keep_representatives(df: DataFrame, pairs: DataFrame,

@@ -1,9 +1,10 @@
 """Iterative graph algorithms as DataFrame join loops (no GraphX needed).
 
-Same execution shape as ``dedup.connected_components``: each round is one
-shuffle on the join key; lineage is cut with ``localCheckpoint`` so plans
-stay bounded regardless of iteration count — at cluster scale the edge
-relation is the only large input and it is persisted once.
+Same loop shape as ``dedup.connected_components_stats``: each round is
+one join against the edge relation plus one aggregate on the node key;
+lineage is cut with ``localCheckpoint`` so plans stay bounded regardless
+of iteration count — at cluster scale the edge relation is the only large
+input and it is persisted once.
 """
 
 from __future__ import annotations

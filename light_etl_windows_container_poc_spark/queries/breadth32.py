@@ -202,9 +202,12 @@ ORDER BY l.cluster_id
 """)
 def entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same-brand lev<=2 linkage over (p_name, p_brand) variant records,
-    min-label CC clusters, highest-weight-variant survivorship."""
-    from pyspark.sql import Window
+    min-label CC clusters, highest-weight-variant survivorship.
 
+    Survivorship rides the final per-cluster aggregate: the min of
+    ``(-n_rows, rec_id, p_name)`` is the heaviest variant, lowest
+    ``rec_id`` on a tie — the oracle's ``row_number`` order — so no
+    window, filter and join back are planned."""
     from ..operators.dedup import connected_components
 
     part = load_tables(spark, sf_dir, ("part",))["part"]
@@ -212,30 +215,29 @@ def entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
            .agg(F.min("p_partkey").cast("long").alias("rec_id"),
                 F.count(F.lit(1)).alias("n_rows"))
            .persist())
-    a = rec.select(F.col("p_brand").alias("bk"), F.col("p_name").alias("na"),
-                   F.col("rec_id").alias("a_id"))
-    b = rec.select(F.col("p_brand").alias("bk"), F.col("p_name").alias("nb"),
-                   F.col("rec_id").alias("b_id"))
-    pairs = (a.join(b, "bk")
-             .filter((F.col("a_id") < F.col("b_id"))
-                     & (F.levenshtein("na", "nb") <= 2))
-             .select("a_id", "b_id"))
-    comp = connected_components(pairs)
-    lab = (rec.join(comp.withColumnRenamed("node", "rec_id"), "rec_id", "left")
-           .withColumn("cluster_id",
-                       F.coalesce(F.col("component"), F.col("rec_id"))))
-    pick = Window.partitionBy("cluster_id").orderBy(F.desc("n_rows"), "rec_id")
-    canon = (lab.withColumn("rn", F.row_number().over(pick))
-             .filter(F.col("rn") == 1)
-             .select("cluster_id", F.col("p_name").alias("canon_name")))
-    out = (lab.join(canon, "cluster_id")
-           .groupBy("cluster_id", "canon_name")
-           .agg(F.min("p_brand").alias("p_brand"),
-                F.count(F.lit(1)).alias("n_variants"),
-                F.sum("n_rows").alias("n_rows"))
-           .orderBy("cluster_id"))
-    rec.unpersist()
-    return out
+    try:
+        a = rec.select(F.col("p_brand").alias("bk"), F.col("p_name").alias("na"),
+                       F.col("rec_id").alias("a_id"))
+        b = rec.select(F.col("p_brand").alias("bk"), F.col("p_name").alias("nb"),
+                       F.col("rec_id").alias("b_id"))
+        pairs = (a.join(b, "bk")
+                 .filter((F.col("a_id") < F.col("b_id"))
+                         & (F.levenshtein("na", "nb") <= 2))
+                 .select("a_id", "b_id"))
+        comp = connected_components(pairs)
+    finally:
+        rec.unpersist()
+    survivor = F.min(F.struct((-F.col("n_rows")).alias("w"), "rec_id",
+                              "p_name"))
+    return (rec.join(comp.withColumnRenamed("node", "rec_id"), "rec_id", "left")
+            .withColumn("cluster_id",
+                        F.coalesce(F.col("component"), F.col("rec_id")))
+            .groupBy("cluster_id")
+            .agg(survivor["p_name"].alias("canon_name"),
+                 F.min("p_brand").alias("p_brand"),
+                 F.count(F.lit(1)).alias("n_variants"),
+                 F.sum("n_rows").alias("n_rows"))
+            .orderBy("cluster_id"))
 
 
 # --------------------------------------------------------------------------

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import sys
 from pathlib import Path
 
@@ -21,3 +22,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SMOKE_SF_DIR
+
+
+@pytest.fixture
+def job_group(spark):
+    """``job_group(name)`` runs its body under the job group ``name``,
+    yields the SparkContext, and leaves the shared session's local
+    properties as they were."""
+    @contextlib.contextmanager
+    def run(group):
+        sc = spark.sparkContext
+        keys = ("spark.jobGroup.id", "spark.job.description",
+                "spark.job.interruptOnCancel")
+        prev = {k: sc.getLocalProperty(k) for k in keys}
+        sc.setJobGroup(group, f"test {group}")
+        try:
+            yield sc
+        finally:
+            for k, v in prev.items():
+                sc.setLocalProperty(k, v)
+    return run

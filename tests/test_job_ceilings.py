@@ -1,0 +1,37 @@
+"""Job-count tripwires for the connected-components round.
+
+At a fixed input and session the number of Spark jobs is deterministic,
+so a ceiling on it catches a job-diet regression that wall clock would
+hide in noise. Each ceiling sits about 10% above the count measured with
+one aggregate and one action per round, and far below the count of the
+earlier round (a left join onto the old labels plus an old-vs-new join
+to test convergence).
+"""
+
+from __future__ import annotations
+
+from light_etl_windows_container_poc_spark.operators.dedup import \
+    connected_components_stats
+from light_etl_windows_container_poc_spark.queries import QUERIES
+
+
+def test_cc_path_graph_job_ceiling(spark, job_group):
+    """A 5-node path takes 5 rounds (4 hops + the fixpoint round):
+    17 jobs with the collect, 49 with the earlier round."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5)], "a_id long, b_id long")
+    with job_group("cc_path_ceiling") as sc:
+        labels, rounds = connected_components_stats(pairs)
+        assert {r.component for r in labels.collect()} == {1}
+        jobs = sc.statusTracker().getJobIdsForGroup("cc_path_ceiling")
+    assert rounds == 5
+    assert len(jobs) <= 19
+
+
+def test_entity_resolution_job_ceiling(spark, sf_dir, job_group):
+    """18 jobs at the test SF, 36 with the earlier round and the
+    window-based survivorship."""
+    with job_group("er_ceiling") as sc:
+        QUERIES["entity_resolution"](spark, sf_dir).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("er_ceiling")
+    assert len(jobs) <= 20

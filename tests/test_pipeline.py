@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-import contextlib
-
 from light_etl_windows_container_poc_spark.pipeline import ETLPipeline
 
 SCHEMA = "Customer_Name string, Order_Date string, Amount string"
@@ -148,22 +146,6 @@ def _two_table_drop(tmp_path):
     return str(src)
 
 
-@contextlib.contextmanager
-def _job_group(spark, group):
-    """Run the body under ``group`` and leave the shared session's local
-    properties as they were."""
-    sc = spark.sparkContext
-    keys = ("spark.jobGroup.id", "spark.job.description",
-            "spark.job.interruptOnCancel")
-    prev = {k: sc.getLocalProperty(k) for k in keys}
-    sc.setJobGroup(group, f"test {group}")
-    try:
-        yield sc
-    finally:
-        for k, v in prev.items():
-            sc.setLocalProperty(k, v)
-
-
 def test_ingest_writes_one_log_append(spark, tmp_path, monkeypatch):
     from light_etl_windows_container_poc_spark import sinks
 
@@ -218,7 +200,7 @@ def test_failing_table_is_isolated_and_logged(spark, tmp_path, monkeypatch):
 
 
 def test_append_jobs_keep_the_callers_job_group(spark, tmp_path,
-                                                monkeypatch):
+                                                monkeypatch, job_group):
     """The appends run on their own driver threads; every job they start
     must still carry the caller's job group, so no ingest job goes
     unattributed."""
@@ -234,7 +216,7 @@ def test_append_jobs_keep_the_callers_job_group(spark, tmp_path,
 
     monkeypatch.setattr(sinks, "append_table", spy)
     wh = str(tmp_path / "warehouse")
-    with _job_group(spark, "ingest_group") as sc:
+    with job_group("ingest_group") as sc:
         tracker = sc.statusTracker()
         ungrouped0 = set(tracker.getJobIdsForGroup(None))
         ETLPipeline(spark, warehouse_dir=wh).ingest_csv_dir(
@@ -247,11 +229,11 @@ def test_append_jobs_keep_the_callers_job_group(spark, tmp_path,
     assert len(grouped) >= len(groups)
 
 
-def test_two_table_ingest_job_ceiling(spark, tmp_path):
+def test_two_table_ingest_job_ceiling(spark, tmp_path, job_group):
     """Noise-free tripwire on the ingest's job diet: one group-by count,
     one append per table and one processing-log append (7 jobs before
     the log rows were batched into one append)."""
-    with _job_group(spark, "ingest_ceiling") as sc:
+    with job_group("ingest_ceiling") as sc:
         ETLPipeline(spark, warehouse_dir=str(tmp_path / "warehouse")
                     ).ingest_csv_dir(_two_table_drop(tmp_path), _DDL,
                                      batch_ts="2026-01-01 00:00:00")
