@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _SANITIZE_RE = re.compile(r"[^a-zA-Z0-9_]")
@@ -89,19 +89,22 @@ def dedup_rows(df: DataFrame, keys: list[str], keep_min_of: str | None = None) -
     return df.groupBy(*keys).agg(*agg)
 
 
-def with_etl_metadata(df: DataFrame, source_name: str,
+def with_etl_metadata(df: DataFrame, source_name: str | Column,
                       batch_ts: str | None = None) -> DataFrame:
     """Append the reference's lineage columns (`source_name`,
-    `processed_at`, `processing_batch`). ``batch_ts`` is injectable so
-    tests and oracle comparisons stay deterministic; production callers
-    omit it and get the session-clock value resolved ONCE at plan time
-    (a literal, not a per-row clock call)."""
+    `processed_at`, `processing_batch`). ``source_name`` is a name or a
+    per-row Column (the ingest core passes its routed `target_table`).
+    ``batch_ts`` is injectable so tests and oracle comparisons stay
+    deterministic; production callers omit it and get the session-clock
+    value resolved ONCE at plan time (a literal, not a per-row clock
+    call)."""
+    src = F.lit(source_name) if isinstance(source_name, str) else source_name
     ts = F.lit(batch_ts).cast("timestamp") if batch_ts else F.current_timestamp()
-    batch_tag = F.concat(F.lit(source_name + "_"),
-                         F.date_format(ts, "yyyyMMdd_HHmmss"))
-    return (df.withColumn("source_name", F.lit(source_name))
+    return (df.withColumn("source_name", src)
             .withColumn("processed_at", ts)
-            .withColumn("processing_batch", batch_tag))
+            .withColumn("processing_batch",
+                        F.concat(src, F.lit("_"),
+                                 F.date_format(ts, "yyyyMMdd_HHmmss"))))
 
 
 def merge_upsert(dim: DataFrame, updates: DataFrame,

@@ -3,25 +3,31 @@
 Reference flow (watch → pattern-route → read → clean → append → log →
 archive → notify) lived across a file watcher, Celery tasks, and pandas
 (`pattern_based_cleaner_watcher.py`, `dataframe_tasks.py`,
-`enhanced_tasks.py`). Here it's a single batch (or streaming — see
-streaming/watcher.py) job:
+`enhanced_tasks.py`). Here it's a single batch job, or a stream (see
+streaming/excel_pipeline.py).
 
-    discover files → route by path pattern → sanitize columns, coerce
-    types, drop empty rows, enrich metadata (ALL tables in one plan) →
-    concurrent per-table appends from the persisted frame → one
-    processing-log append for the whole ingest → archive inputs → fire
-    completion callbacks.
+One core, two callers. `route_clean_append` is the whole routed ingest:
 
-Scale shape: the input corpus is parsed and cleaned exactly ONCE — the
-routed+cleaned frame is persisted, per-table row counts come from one
-aggregation over it, and each table's append re-reads the cache, never
-the raw files. Discovery/routing/archive are metadata-only.
+    route on source_path → sanitize names → drop all-empty rows, then
+    coerce by name → lineage from target_table (ALL tables in one
+    plan) → persist → ONE (file, table) row-count aggregation →
+    concurrent per-table appends from the cache.
 
-Sink shape: the reference appends each table and then logs it, one step
-at a time (`dataframe_tasks.py:78-103`). Here the tables append
-concurrently, one driver thread each, and every table's log row (success
-or error) lands in ONE `etl_processing_log` append: the sink jobs, not
-the parse, set an ingest's latency once the corpus is cached.
+`ETLPipeline.ingest_csv_dir` feeds it a CSV drop and the Excel stream's
+`excel_etl_batch_handler` feeds it each micro-batch. They differ only in
+what they do with its result:
+- failure policy: batch logs a failing table as an ``error`` row and
+  continues; the stream re-raises the first failed append so the
+  micro-batch replays from its checkpoint;
+- log granularity: batch writes one `etl_processing_log` row per table
+  (its counts summed over files); the stream writes one
+  ``completed`` row per (file, table).
+
+Scale shape: the corpus is parsed and cleaned exactly ONCE; the counts
+and every append re-read the persisted frame, never the raw files, and
+discovery/routing/archive are metadata-only. So once the corpus is
+cached the sink jobs set an ingest's latency (the reference appends and
+logs one table at a time, `dataframe_tasks.py:78-103`).
 
 Reliability surface (reference `enhanced_tasks.py`):
 - per-file retry with backoff then quarantine (`ingest_files_with_retry`
@@ -36,6 +42,7 @@ from __future__ import annotations
 import os
 import shutil
 import time
+from collections import Counter
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -43,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.cleaning import (coerce_by_name, drop_empty_rows,
-                                 sanitize_column_names)
+                                 sanitize_column_names, with_etl_metadata)
 from .operators.routing import PatternRouter
 from .sinks import (append_processing_log, append_tables,
                     processing_log_row, write_processing_log)
@@ -72,6 +79,40 @@ def _move_file(src: str, dest_dir: str) -> str:
     return dest
 
 
+def route_clean_append(df: DataFrame, warehouse_dir: str,
+                       router: PatternRouter, batch_ts: str | None = None,
+                       ) -> tuple[dict[tuple[str, str], int],
+                                  dict[str, tuple[float, Exception | None]]]:
+    """Route ``df`` on its ``source_path``, clean every table in one plan,
+    and append each routed table to the warehouse.
+
+    Returns the landed row counts keyed by ``(source_path, target_table)``
+    and ``append_tables``' per-table ``(seconds, error)`` outcomes. The
+    caller owns the failure policy and the processing-log rows.
+    """
+    named = sanitize_column_names(router.route(df, path_col="source_path"))
+    # dropna(how='all') parity (reference enhanced_tasks.py:97-103) runs
+    # over the DATA columns only, since the lineage columns are never
+    # null; and BEFORE coercion, as pandas does, so a row whose only value
+    # is junk in an *amount* column lands as an all-null data row
+    data_cols = [c for c in named.columns
+                 if c not in ("source_path", "target_table")]
+    cleaned = with_etl_metadata(
+        coerce_by_name(drop_empty_rows(named, data_cols)),
+        F.col("target_table"), batch_ts).persist()
+    try:
+        counts = {(r["source_path"], r["target_table"]): r["n"] for r in
+                  cleaned.groupBy("source_path", "target_table")
+                  .agg(F.count(F.lit(1)).alias("n")).collect()}
+        outcomes = append_tables(df.sparkSession, warehouse_dir, {
+            table: (cleaned.filter(F.col("target_table") == table)
+                    .drop("target_table"))
+            for table in {t for _, t in counts}})
+    finally:
+        cleaned.unpersist()
+    return counts, outcomes
+
+
 @dataclass
 class ETLPipeline:
     spark: SparkSession
@@ -87,45 +128,31 @@ class ETLPipeline:
                        archive_dir: str | None = None,
                        notify: bool = True) -> list[IngestResult]:
         """Route every CSV under ``input_dir`` by path pattern and append
-        each routed group to its warehouse table.
+        each routed group to its warehouse table (``route_clean_append``).
 
-        Single-pass: the binaryFile scan + CSV parse + cleaning run once
-        into a persisted frame; per-table counts come from ONE aggregation
-        over it and the per-table appends, run concurrently, re-read the
-        cache. A failing table yields an ``error`` result and log row and
-        the other tables still land. Then ONE processing-log append
-        carries every table's row. Results are sorted by table.
-        ``archive_dir`` moves successfully-ingested input files there
-        afterwards.
+        A failing table yields an ``error`` result and log row and the
+        other tables still land. Then ONE processing-log append carries
+        every table's row. Results are sorted by table. ``archive_dir``
+        moves successfully-ingested input files there afterwards.
         """
-        df = read_csv_auto(self.spark, input_dir, schema_ddl)
-        routed = self.router.route(df, path_col="source_path")
-        # clean ALL tables in one plan: the transforms are schema-wide and
-        # table-independent; lineage columns derive from target_table
-        cleaned = self._clean(routed, batch_ts).persist()
+        counts, outcomes = route_clean_append(
+            read_csv_auto(self.spark, input_dir, schema_ddl),
+            self.warehouse_dir, self.router, batch_ts)
+        rows: Counter[str] = Counter()
+        for (_path, table), n in counts.items():
+            rows[table] += n
         results: list[IngestResult] = []
         log: list[tuple] = []
-        try:
-            counts = {r["target_table"]: r["n"] for r in
-                      cleaned.groupBy("target_table")
-                      .agg(F.count(F.lit(1)).alias("n")).collect()}
-            outcomes = append_tables(self.spark, self.warehouse_dir, {
-                table: (cleaned.filter(F.col("target_table") == table)
-                        .drop("target_table"))
-                for table in counts})
-            for table in sorted(outcomes):
-                seconds, err = outcomes[table]
-                # log-and-continue, reference behavior
-                r = (IngestResult(table, counts[table], "success")
-                     if err is None
-                     else IngestResult(table, 0, "error", str(err)))
-                results.append(r)
-                log.append(processing_log_row(
-                    input_dir, r.rows, r.status, error_message=r.error,
-                    processing_time_seconds=seconds, sheet_name=table))
-        finally:
-            cleaned.unpersist()
-            append_processing_log(self.spark, self.warehouse_dir, log)
+        for table in sorted(outcomes):
+            seconds, err = outcomes[table]
+            # log-and-continue, reference behavior
+            r = (IngestResult(table, rows[table], "success") if err is None
+                 else IngestResult(table, 0, "error", str(err)))
+            results.append(r)
+            log.append(processing_log_row(
+                input_dir, r.rows, r.status, error_message=r.error,
+                processing_time_seconds=seconds, sheet_name=table))
+        append_processing_log(self.spark, self.warehouse_dir, log)
         if archive_dir is not None and results and \
                 all(r.status == "success" for r in results):
             for src in self._list_input_files(input_dir):
@@ -177,25 +204,6 @@ class ETLPipeline:
         return results
 
     # -- internals --------------------------------------------------------
-
-    def _clean(self, routed: DataFrame, batch_ts: str | None) -> DataFrame:
-        # dropna(how='all') parity (reference enhanced_tasks.py:97-103)
-        # runs over the DATA columns only: the pipeline's source_path /
-        # target_table lineage columns are always non-null, so including
-        # them would keep every all-empty data row
-        named = sanitize_column_names(routed)
-        data_cols = [c for c in named.columns
-                     if c not in ("source_path", "target_table")]
-        base = coerce_by_name(drop_empty_rows(named, data_cols))
-        # with_etl_metadata takes a scalar source name; here lineage derives
-        # from the routed target_table COLUMN so one plan serves all tables
-        ts = (F.lit(batch_ts).cast("timestamp") if batch_ts
-              else F.current_timestamp())
-        return (base.withColumn("source_name", F.col("target_table"))
-                .withColumn("processed_at", ts)
-                .withColumn("processing_batch",
-                            F.concat(F.col("target_table"), F.lit("_"),
-                                     F.date_format(ts, "yyyyMMdd_HHmmss"))))
 
     def _list_input_files(self, input_dir: str) -> list[str]:
         out = []

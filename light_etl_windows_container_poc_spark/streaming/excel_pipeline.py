@@ -1,20 +1,20 @@
 """The reference's WHOLE flow, streaming: watch an Excel drive →
 pattern-route → clean → per-table warehouse append → processing log.
 
-The batch pipeline (`pipeline.py`) already re-expresses the reference's
-watcher+Celery+pandas composition as one engine call; this module runs
-the same operators continuously on top of the streaming excel source
-(`sources/excel_datasource.py`), so new/modified workbooks flow to the
-warehouse without a poll-loop process — the Structured Streaming
-checkpoint replaces the watcher's seen-file bookkeeping
-(`pattern_based_cleaner_watcher.py:239-314`).
+Each micro-batch of the streaming excel source
+(`sources/excel_datasource.py`) runs through the batch pipeline's one
+ingest core, `pipeline.route_clean_append`: the same routing, cleaning,
+lineage, single-parse persist and concurrent appends. The Structured
+Streaming checkpoint replaces the watcher's seen-file bookkeeping
+(`pattern_based_cleaner_watcher.py:239-314`), so new/modified workbooks
+flow to the warehouse without a poll-loop process.
 
-Per micro-batch, the parsed corpus is routed+cleaned ONCE (persisted),
-the per-table appends run concurrently off that cache, and the
-processing-log rows are derived from one row-count aggregation and land
-in ONE append — the batch pipeline's single-parse scale contract and
-sink shape, preserved under streaming. If any table's append raises,
-the others still finish, then the micro-batch fails without a log row.
+The stream differs from the batch ingest in two things only:
+- failure policy: if any table's append raises, the others still
+  finish, then the micro-batch fails with the first error (by table)
+  and writes no log row, so it replays from the checkpoint;
+- log granularity: one ``completed`` `etl_processing_log` row per
+  (file, table), all in ONE append.
 """
 
 from __future__ import annotations
@@ -23,62 +23,36 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.cleaning import (coerce_by_name, drop_empty_rows,
-                                  sanitize_column_names, with_etl_metadata)
 from ..operators.routing import PatternRouter
-from ..sinks import append_processing_log, append_tables, processing_log_row
+from ..pipeline import route_clean_append
+from ..sinks import append_processing_log, processing_log_row
 
 
 def excel_etl_batch_handler(warehouse_dir: str,
                             router: PatternRouter | None = None,
                             batch_ts: str | None = None,
-                            source_name: str = "excel_stream",
                             ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function: route on source_path → sanitize/coerce/
-    drop-empty/enrich in one plan → append the routed tables concurrently
-    → append the per-file processing-log rows in one job (reference
-    `etl_processing_log`, `database_postgres.py:71-83`)."""
+    """foreachBatch function: `route_clean_append`, then the per-file
+    processing-log rows in one job (reference `etl_processing_log`,
+    `database_postgres.py:71-83`)."""
     router = router or PatternRouter()
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         t0 = time.time()
-        routed = router.route(batch, path_col="source_path")
-        # the drop-empty column list must come from the SANITIZED frame:
-        # sanitize_column_names may rewrite schema names (e.g. `Order ID`
-        # -> order_id), and a pre-sanitization name would be unresolvable
-        # in every micro-batch
-        sanitized = sanitize_column_names(routed)
-        cleaned = with_etl_metadata(
-            drop_empty_rows(
-                coerce_by_name(sanitized),
-                cols=[c for c in sanitized.columns
-                      if c not in ("source_path", "target_table")]),
-            source_name, batch_ts=batch_ts)
-        cleaned.persist()
-        try:
-            per_file = (cleaned.groupBy("source_path", "target_table")
-                        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-                        .collect())
-            spark = batch.sparkSession
-            outcomes = append_tables(spark, warehouse_dir, {
-                table: (cleaned.filter(F.col("target_table") == table)
-                        .drop("target_table"))
-                for table in {r["target_table"] for r in per_file}})
-            for table in sorted(outcomes):
-                if outcomes[table][1] is not None:
-                    raise outcomes[table][1]
-            # the micro-batch id lives in the streaming checkpoint/metrics,
-            # not in the log: its schema is shared with the batch pipeline
-            dt = time.time() - t0
-            append_processing_log(spark, warehouse_dir, [
-                processing_log_row(r["source_path"], r["n"], "completed",
-                                   processing_time_seconds=dt)
-                for r in per_file])
-        finally:
-            cleaned.unpersist()
+        counts, outcomes = route_clean_append(batch, warehouse_dir, router,
+                                              batch_ts)
+        for table in sorted(outcomes):
+            if outcomes[table][1] is not None:
+                raise outcomes[table][1]
+        # the micro-batch id lives in the streaming checkpoint/metrics,
+        # not in the log: its schema is shared with the batch pipeline
+        dt = time.time() - t0
+        append_processing_log(batch.sparkSession, warehouse_dir, [
+            processing_log_row(path, n, "completed",
+                               processing_time_seconds=dt)
+            for (path, _table), n in counts.items()])
 
     return handle
 

@@ -580,9 +580,10 @@ def test_salting_advice_is_one_scan(spark, monkeypatch):
     the partials — and the advised factors must match the two-pass
     formula exactly. Locked structurally (r11 ADVICE): the sketch pass
     is spied to run exactly once, and any reintroduced separate
-    count() job inside salting_advice fails loudly."""
-    from pyspark.sql import DataFrame
-
+    count() job inside salting_advice fails loudly. The count guard
+    patches the session's concrete DataFrame class: PySpark 4 overrides
+    ``count`` in its classic subclass, so a patch on the
+    ``pyspark.sql.DataFrame`` base would never be called."""
     from light_etl_windows_container_poc_spark.operators import sketches
     from light_etl_windows_container_poc_spark.operators.scale import (
         salting_advice,
@@ -605,7 +606,7 @@ def test_salting_advice_is_one_scan(spark, monkeypatch):
             "salting_advice ran a DataFrame.count() — the advisor must "
             "derive n from the MG partials' carrier rows (one scan)")
 
-    monkeypatch.setattr(DataFrame, "count", no_count)
+    monkeypatch.setattr(type(spark.range(0)), "count", no_count)
     try:
         advice_df = salting_advice(df, "k", n_partitions=8, k=64)
     finally:

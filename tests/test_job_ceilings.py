@@ -1,11 +1,12 @@
-"""Job-count tripwires for the connected-components round.
+"""Job-count tripwires for the connected-components round and the
+routed-ingest core.
 
 At a fixed input and session the number of Spark jobs is deterministic,
 so a ceiling on it catches a job-diet regression that wall clock would
-hide in noise. Each ceiling sits about 10% above the count measured with
-one aggregate and one action per round, and far below the count of the
-earlier round (a left join onto the old labels plus an old-vs-new join
-to test convergence).
+hide in noise. Each ceiling sits about 10% above the measured count. The
+connected-components ceilings sit far below the count of the earlier
+round (a left join onto the old labels plus an old-vs-new join to test
+convergence).
 """
 
 from __future__ import annotations
@@ -13,6 +14,8 @@ from __future__ import annotations
 from light_etl_windows_container_poc_spark.operators.dedup import \
     connected_components_stats
 from light_etl_windows_container_poc_spark.queries import QUERIES
+from light_etl_windows_container_poc_spark.streaming.excel_pipeline import \
+    excel_etl_batch_handler
 
 
 def test_cc_path_graph_job_ceiling(spark, job_group):
@@ -35,3 +38,20 @@ def test_entity_resolution_job_ceiling(spark, sf_dir, job_group):
         QUERIES["entity_resolution"](spark, sf_dir).collect()
         jobs = sc.statusTracker().getJobIdsForGroup("er_ceiling")
     assert len(jobs) <= 20
+
+
+def test_stream_micro_batch_job_ceiling(spark, tmp_path, job_group):
+    """One Excel-stream micro-batch over two tables, fed as a static
+    frame: 6 jobs (three under the one (file, table) count collect, one
+    append per table and one processing-log append). The batch side's
+    ceiling is `test_pipeline.test_two_table_ingest_job_ceiling`."""
+    batch = spark.createDataFrame(
+        [("ana", "/drive/customer_data/c.xlsx"),
+         ("widget", "/drive/sales_data/s.xlsx")],
+        "v string, source_path string")
+    wh = str(tmp_path / "warehouse")
+    with job_group("stream_ceiling") as sc:
+        excel_etl_batch_handler(wh, batch_ts="2024-06-01 00:00:00")(batch, 0)
+        jobs = sc.statusTracker().getJobIdsForGroup("stream_ceiling")
+    assert spark.read.parquet(f"{wh}/etl_processing_log").count() == 2
+    assert len(jobs) <= 7

@@ -283,6 +283,42 @@ def test_processing_log_schema_is_one_schema(spark, tmp_path):
     assert statuses == {"success", "quarantined", "completed"}
 
 
+def test_batch_and_stream_land_the_same_rows(spark, tmp_path):
+    """The batch ingest and an Excel-stream micro-batch share one ingest
+    core, so identical rows land identically, lineage included. The
+    all-empty row is dropped by both. The row whose only value is a junk
+    amount lands in both as an all-null data row: empty rows are dropped
+    on the raw strings, before the amount is coerced (pandas parity)."""
+    from light_etl_windows_container_poc_spark.streaming.excel_pipeline \
+        import excel_etl_batch_handler
+
+    rows = [("Ana", "2024-01-05", "10.5"), (None, None, None),
+            (None, None, "junk")]
+    ts = "2026-01-01 00:00:00"
+    src = tmp_path / "drop"
+    _mkcsv(src / "customer_data" / "a.csv",
+           [",".join(v or "" for v in r) for r in rows])
+    batch_wh = str(tmp_path / "batch_wh")
+    ETLPipeline(spark, warehouse_dir=batch_wh).ingest_csv_dir(
+        str(src), _DDL, batch_ts=ts)
+
+    # a static frame stands in for the micro-batch: the stream source's
+    # schema is the DDL's string columns plus source_path
+    stream_wh = str(tmp_path / "stream_wh")
+    static = spark.createDataFrame(
+        [(*r, "/drive/customer_data/a.xlsx") for r in rows],
+        _DDL + ", source_path string")
+    excel_etl_batch_handler(stream_wh, batch_ts=ts)(static, 0)
+
+    def landed(wh):
+        df = spark.read.parquet(f"{wh}/dim_customers").drop("source_path")
+        return df.dtypes, sorted(map(tuple, df.collect()), key=repr)
+
+    batch, stream = landed(batch_wh), landed(stream_wh)
+    assert len(batch[1]) == 2
+    assert batch == stream
+
+
 def test_append_tables_stress_records_every_table(spark, tmp_path):
     """More tables than cores and a short thread switch interval: every
     table's outcome is recorded once and every row lands."""

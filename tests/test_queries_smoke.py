@@ -87,26 +87,31 @@ def test_certification_budget_is_exactly_allocated():
     assert ordered == [*never, *ent._PINNED, *stalest]
 
 
-def test_r16_allocation():
-    """The r16 driver sample: the ten r15-touched queries that missed the
-    r15 sample, then the 17 r9-latest rows r15 had no slots for, then
-    the stalest r10 rows up to 50."""
+def test_r17_allocation():
+    """The r17 certification sample: the ten r15-touched queries still
+    awaiting certification, the two pipeline certs over the shared
+    ingest core, the nine r16-touched queries, then the 17 r9-latest
+    rows, then the stalest r10 rows up to 50."""
     import __spark_entry__ as ent
 
     ordered = list(ent.queries())
-    assert ordered[:10] == ent._PINNED == [
+    assert ordered[:21] == ent._PINNED == [
         "ann_append_cert", "ann_takedown_cert", "cc_star_components",
         "curate_corpus_v2", "stream_ams_cert", "countmin_sketch",
         "cm_join_size", "knn_graph", "ann_ivf_fullprobe_exact",
-        "dedup_embedding_blocked"]
-    assert ordered[10:27] == [
+        "dedup_embedding_blocked", "pipeline_e2e_cert",
+        "pipeline_e2e_stream_cert", "entity_resolution", "cc_convergence",
+        "dedup_clusters", "dedup_keep_one", "curate_corpus",
+        "split_leakage_safe", "semdedup_soundness", "dedup_ngram_jaccard",
+        "dedup_minhash_lsh"]
+    assert ordered[21:38] == [
         "seasonality_dft", "session_window_agg",
         "sketch_approx_percentile", "sketch_hll_mergeable", "skew_profile",
         "stream_dq_gate_cert", "stream_hll_cert", "text_bigram_lm",
         "text_rarity", "text_repetition", "theil_u_dow_type", "time_rollup",
         "window_moving_avg", "window_range_value", "window_share",
         "zipf_slope", "zscore_outliers"]
-    assert {ent._CERTIFICATION[n][1] for n in ordered[27:50]} == {10}
+    assert {ent._CERTIFICATION[n][1] for n in ordered[38:50]} == {10}
 
 
 def test_frozen_r5_population_is_subset_of_registry():
