@@ -1,10 +1,15 @@
 """Iterative graph algorithms as DataFrame join loops (no GraphX needed).
 
 Same loop shape as ``dedup.connected_components_stats``: each round is
-one join against the edge relation plus one aggregate on the node key;
-lineage is cut with ``localCheckpoint`` so plans stay bounded regardless
-of iteration count — at cluster scale the edge relation is the only large
-input and it is persisted once.
+one join against the edge relation plus one aggregate on the node key —
+at cluster scale the edge relation is the only large input and it is
+persisted once.
+
+One cut rule for every round loop: a round ends in ``rounds.cut``, which
+checkpoints it with one action whose row count is the loop's size or
+emptiness test, and releases the round it supersedes, so plans stay
+bounded and no dead round stays persisted. A checkpoint the returned
+frame still reads is never released.
 """
 
 from __future__ import annotations
@@ -12,11 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .rounds import cut, release
+
 
 def pagerank(edges: DataFrame, damping: float = 0.85,
              iterations: int = 10,
-             dangling_correction: bool = True,
-             eager_checkpoint: bool = True) -> DataFrame:
+             dangling_correction: bool = True) -> DataFrame:
     """PageRank over a directed edge list (src, dst) → (node, pr).
 
     Callers with an undirected graph pass both edge directions — such
@@ -26,19 +32,16 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
     broadcast 1-row cross join (no driver collect), keeping Σpr = 1.
 
     Per-round work is ONE join + ONE aggregation: out-degree is folded
-    into a persisted weighted-edge relation up front. The only action per
-    round is the eager checkpoint that cuts lineage (iterative joins
-    otherwise compound planning time); ``eager_checkpoint=False`` defers
-    materialization so rounds 1..n-1 fuse into the FINAL round's
-    checkpoint — measured ~3× faster for few-iteration runs on small
-    graphs (one job instead of one per round), at the cost of re-running
-    every round if a partition is lost mid-job. The final round always
-    checkpoints eagerly so the returned DataFrame is materialized and
-    every internal cache (edge list, node set, weighted edges) is
-    RELEASED before return — a long-lived curation session never
-    accumulates pinned graph caches. Partitioning is sized to the rank
-    relation (≥1 partition per ~100k nodes): a 30-node graph must not pay
-    32-partition shuffle scheduling, a 1e9-node graph still spreads.
+    into a persisted weighted-edge relation up front. Rounds 1..n-1 cut
+    lineage with a lazy checkpoint and fuse into the final round's
+    ``cut``, the call's one round job (a lost partition re-runs every
+    round). The returned DataFrame is then materialized, so every
+    internal cache (edge list, node set, weighted edges) and every
+    intermediate round is RELEASED before return — a long-lived curation
+    session never accumulates pinned graph caches. Partitioning is sized
+    to the rank relation (≥1 partition per ~100k nodes): a 30-node graph
+    must not pay 32-partition shuffle scheduling, a 1e9-node graph still
+    spreads.
     """
     spark = edges.sparkSession
     # the edge list may carry an arbitrarily expensive upstream plan
@@ -61,7 +64,11 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
     w_edges.count()
     edges.unpersist()
     pr = nodes.withColumn("pr", F.lit(1.0 / n))
+    lazy_rounds = []
     for it in range(iterations):
+        if it:
+            pr = pr.localCheckpoint(eager=False)
+            lazy_rounds.append(pr)
         contrib = (w_edges.join(pr.withColumnRenamed("node", "src"), "src")
                    .groupBy("dst")
                    .agg(F.sum(F.col("pr") * F.col("w")).alias("mass")))
@@ -75,17 +82,12 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
             new_pr = (new_pr.crossJoin(F.broadcast(lost))
                       .select("node", (F.col("mass") + F.col("lost"))
                               .alias("mass")))
-        # final round is ALWAYS eager: with eager_checkpoint=False the
-        # lazy rounds fuse into this one job, the result is materialized,
-        # and the caches below can be released instead of living forever
         pr = (new_pr.select("node",
                             (F.lit((1.0 - damping) / n)
                              + F.lit(damping) * F.col("mass")).alias("pr"))
-              .coalesce(nparts)
-              .localCheckpoint(eager=eager_checkpoint
-                               or it == iterations - 1))
-    if iterations == 0:
-        pr = pr.localCheckpoint(eager=True)
+              .coalesce(nparts))
+    pr, _ = cut(pr)
+    release(*lazy_rounds)
     w_edges.unpersist()
     nodes_cached.unpersist()
     return pr
@@ -159,17 +161,16 @@ def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
     from pyspark.sql import Window
 
     edges = edges.select("u", "v").persist()
-    labels = (edges.select(F.col("u").alias("node")).distinct()
-              .select("node", F.col("node").alias("label"))
-              .localCheckpoint(eager=True))
+    labels, _ = cut(edges.select(F.col("u").alias("node")).distinct()
+                    .select("node", F.col("node").alias("label")))
     top1 = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("label"))
     for _ in range(rounds):
         freq = (edges.join(labels.withColumnRenamed("node", "v"), "v")
                 .groupBy(F.col("u").alias("node"), "label")
                 .agg(F.count(F.lit(1)).alias("c")))
-        labels = (freq.withColumn("rn", F.row_number().over(top1))
-                  .filter(F.col("rn") == 1).select("node", "label")
-                  .localCheckpoint(eager=True))
+        labels, _ = cut(freq.withColumn("rn", F.row_number().over(top1))
+                        .filter(F.col("rn") == 1).select("node", "label"),
+                        labels)
     edges.unpersist()
     return labels
 
@@ -206,16 +207,14 @@ def connected_components_star(pairs: DataFrame, max_phases: int = 40,
     for a 200-node path: 6 phases vs 100+ min-label rounds (tested).
 
     Each phase is two grouped aggregations + a join, all keyed on the
-    node id; the fixpoint test compares canonical edge sets. Lineage is
-    cut per phase (the pagerank discipline).
+    node id; the fixpoint test compares canonical edge sets. Each phase
+    ends in one ``cut``.
     """
     nodes = (pairs.select(F.col("a_id").alias("n"))
              .union(pairs.select(F.col("b_id").alias("n"))).distinct()
              .localCheckpoint(eager=False))  # materializes in final join
-    cur = _canon(pairs.select(F.col("a_id").alias("u"),
-                              F.col("b_id").alias("v"))
-                 ).localCheckpoint(eager=False)
-    prev_n = cur.count()  # materializes the lazy checkpoint
+    cur, prev_n = cut(_canon(pairs.select(F.col("a_id").alias("u"),
+                                          F.col("b_id").alias("v"))))
     phases = 0
     for _ in range(max_phases):
         sym = (cur.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
@@ -224,16 +223,9 @@ def connected_components_star(pairs: DataFrame, max_phases: int = 40,
         # large-star: group the SYMMETRIC view by u
         m = (sym.groupBy("u").agg(F.min("v").alias("mn"))
              .select("u", F.least("mn", "u").alias("m")))
-        # large-star output is ALREADY (hi, lo)-oriented: every emitted
-        # edge is (v, m) with m = min(Γ(u) ∪ {u}) ≤ u < v, so the old
-        # `_canon(ls)` reduced to a pure DISTINCT — and small-star is
-        # duplicate-insensitive (m2 is a min; ss's duplicates collapse
-        # in the final _canon), so the intermediate distinct + its
-        # localCheckpoint bought nothing semantically. Feeding ls
-        # straight through drops one full |edges| shuffle and one
-        # materialization per phase (r15, guide §2.4); `nxt` is
-        # set-identical, so the fixpoint decision and the final
-        # component map are unchanged.
+        # large-star output is already (hi, lo)-oriented (every emitted
+        # edge is (v, m) with m ≤ u < v) and small-star is
+        # duplicate-insensitive, so it feeds small-star as it is
         low = (sym.filter(F.col("v") > F.col("u")).join(m, "u")
                .select(F.col("v").alias("u"), F.col("m").alias("v")))
 
@@ -243,26 +235,15 @@ def connected_components_star(pairs: DataFrame, max_phases: int = 40,
         ss = (low.join(m2, "u")
               .select(F.col("v").alias("u"), F.col("m").alias("v"))
               .unionAll(m2.select(F.col("u"), F.col("m").alias("v"))))
-        # LAZY checkpoint (r15): eager=True ran a dedicated
-        # materialization job before the phase's count — eager=False
-        # still persists+truncates lineage, but materialization happens
-        # inside the nxt.count() job below, and next phase's sym reads
-        # nxt from the same cache (the dedup.connected_components
-        # discipline). Same phase results, fewer jobs per phase.
-        nxt = _canon(ss).localCheckpoint(eager=False)
+        nxt, n = cut(_canon(ss))
         phases += 1
-        # fixpoint test, count-guarded (r14): both relations are DISTINCT
-        # canonical edge sets, so |nxt| != |cur| proves inequality for the
-        # price of one count over the already-materialized checkpoint, and
-        # |nxt| == |cur| with nxt \ cur empty proves equality — the second
-        # exceptAll shuffle the old two-sided test paid every phase only
-        # runs on the (rare) equal-count phases, typically just the final
-        # one. Same convergence decision, ~2 fewer jobs per phase.
-        n = nxt.count()
+        # fixpoint test: both are DISTINCT canonical edge sets, so unequal
+        # counts prove inequality, and equal counts with nxt \ cur empty
+        # prove equality; cur is released only after that check reads it
         same = (n == prev_n
                 and nxt.exceptAll(cur).limit(1).count() == 0)
-        prev_n = n
-        cur = nxt
+        release(cur)
+        prev_n, cur = n, nxt
         if same:
             break
     else:  # pragma: no cover - certification graphs converge fast
@@ -291,18 +272,14 @@ def k_core(pairs: DataFrame, k: int, rounds: int,
            .unionAll(pairs.select(F.col("b_id").alias("u"),
                                   F.col("a_id").alias("v")))
            .distinct().persist())
-    alive = sym.select(F.col("u").alias("n")).distinct() \
-               .localCheckpoint(eager=True)
-    prev_count = alive.count()
+    alive, prev_count = cut(sym.select(F.col("u").alias("n")).distinct())
     converged = False
     for _ in range(rounds):
         deg = (sym.join(alive.withColumnRenamed("n", "u"), "u")
                .join(alive.withColumnRenamed("n", "v"), "v")
                .groupBy("u").agg(F.count(F.lit(1)).alias("d")))
-        alive = (deg.filter(F.col("d") >= k)
-                 .select(F.col("u").alias("n"))
-                 .localCheckpoint(eager=True))
-        cur = alive.count()
+        alive, cur = cut(deg.filter(F.col("d") >= k)
+                         .select(F.col("u").alias("n")), alive)
         converged = cur == prev_count
         prev_count = cur
     sym.unpersist()

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 
 from ..functions.texts import minhash_signature, signature_agreement
 from .dedup import band_hash_array
+from .rounds import cut, release
 
 EXACT_SUBDIR = "exact"
 SIGS_SUBDIR = "sigs"
@@ -313,25 +314,22 @@ def greedy_keep(ids: DataFrame, pairs: DataFrame,
              .union(pairs.select(F.col("b_id").alias("lo"),
                                  F.col("a_id").alias("hi"))
                     .filter(F.col("lo") < F.col("hi")))
-             .dropDuplicates(["lo", "hi"])
-             .localCheckpoint(eager=True))
+             .dropDuplicates(["lo", "hi"]))
     # only docs that appear in a pair need rounds — everything else is
     # kept outright, and a pair-free batch (the common case once history
-    # absorbs its dups) exits after the single materialization above
-    if edges.limit(1).count() == 0:
-        # pair-free batch (the common case once history absorbs its
-        # dups): everything is kept, no rounds run
+    # absorbs its dups) exits after the single materialization here
+    edges, n_edges = cut(edges)
+    if n_edges == 0:
         return all_ids.select("doc", F.lit(1).cast("int").alias("keep"))
     paired = (edges.select(F.col("lo").alias("doc"))
               .union(edges.select(F.col("hi").alias("doc")))
               .distinct())
-    alive = paired
+    # the result reads edges and the frontier parts lazily; only the
+    # superseded alive sets are released
+    alive, n_alive = cut(paired)
     kept_parts: list[DataFrame] = []
     rounds_left = max_rounds
-    while True:
-        alive = alive.localCheckpoint(eager=True)
-        if alive.limit(1).count() == 0:
-            break
+    while n_alive:
         # emptiness is checked BEFORE this guard, so a chain of exactly
         # max_rounds finishes its last working round, drains on the next
         # loop head, and exits cleanly — the error fires only when work
@@ -348,13 +346,13 @@ def greedy_keep(ids: DataFrame, pairs: DataFrame,
         frontier = (alive.join(blocked, "doc", "left_anti")
                     .localCheckpoint(eager=True))
         kept_parts.append(frontier)
-        # dropped: alive docs adjacent to a kept frontier doc; the new
-        # alive set is derived lazily and materialized at loop head
+        # dropped: alive docs adjacent to a kept frontier doc
         dropped = (alive_edges.join(frontier.withColumnRenamed("doc", "lo"),
                                     "lo")
                    .select(F.col("hi").alias("doc")).distinct())
-        alive = (alive.join(frontier, "doc", "left_anti")
-                 .join(dropped, "doc", "left_anti"))
+        alive, n_alive = cut(alive.join(frontier, "doc", "left_anti")
+                             .join(dropped, "doc", "left_anti"), alive)
+    release(alive)
     kept = paired.limit(0) if not kept_parts else kept_parts[0]
     for p in kept_parts[1:]:
         kept = kept.union(p)

@@ -61,6 +61,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.texts import words
+from .rounds import cut
 
 
 def token_positions(docs: DataFrame, id_col: str = "doc_id",
@@ -132,13 +133,11 @@ def window_classes(docs: DataFrame, n: int, id_col: str = "doc_id",
     class equal; equal leg classes make every covered token equal."""
     if n < 1:
         raise ValueError(f"window length must be >= 1, got {n}")
-    cur = _level0(token_positions(docs, id_col, text_col))
-    cur = cur.localCheckpoint(eager=True)
+    cur, _ = cut(_level0(token_positions(docs, id_col, text_col)))
     span = 1
     while n > span * _MAX_LEGS:
         quad = _shift_join(cur, [0, span, 2 * span, 3 * span])
-        cur = (_canonicalize(quad, ["c0", "c1", "c2", "c3"])
-               .localCheckpoint(eager=True))
+        cur, _ = cut(_canonicalize(quad, ["c0", "c1", "c2", "c3"]), cur)
         span *= 4
     k = -(-n // span)  # ceil: legs needed to cover n with span-s classes
     shifts = sorted({i * span for i in range(max(k - 1, 0))} | {n - span})

@@ -238,8 +238,7 @@ def pagerank_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     edges = word_cooccur_edges(docs)
-    return (pagerank(edges, iterations=6, dangling_correction=False,
-                     eager_checkpoint=False)
+    return (pagerank(edges, iterations=6, dangling_correction=False)
             .orderBy(F.desc("pr"), "node"))
 
 

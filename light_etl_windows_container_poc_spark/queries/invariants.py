@@ -304,8 +304,7 @@ def pagerank_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     edges = word_cooccur_edges(docs)
-    pr = pagerank(edges, iterations=6, dangling_correction=False,
-                  eager_checkpoint=False)
+    pr = pagerank(edges, iterations=6, dangling_correction=False)
     return pr.agg(
         F.count(F.lit(1)).alias("n_nodes"),
         (F.abs(F.sum("pr") - 1.0) <= 1e-9).cast("int")

@@ -8,6 +8,7 @@ one number scales from laptop to 1000 executors without retuning.
 
 from __future__ import annotations
 
+import atexit
 import os
 import tempfile
 import zipfile
@@ -23,23 +24,25 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     at launch. Zipping the package and addPyFile-ing it works in every
     order, exactly once per session. On a real cluster this is what
     --py-files does at submit time; there this is a no-op-cost re-add.
+    The zip is a fresh temp file, removed when the process exits: a fixed
+    per-pid name would be reused by a later process with a recycled pid
+    and ship it a stale copy of the package.
     """
     sc = spark.sparkContext
     if getattr(sc, "_letl_pkg_shipped", False):
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     pkg_name = os.path.basename(pkg_dir)
-    zpath = os.path.join(tempfile.gettempdir(),
-                         f"{pkg_name}_{os.getpid()}.zip")
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(root, fn)
-                        rel = os.path.join(pkg_name,
-                                           os.path.relpath(full, pkg_dir))
-                        z.write(full, rel)
+    fd, zpath = tempfile.mkstemp(prefix=f"{pkg_name}_", suffix=".zip")
+    atexit.register(os.remove, zpath)
+    with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as z:
+        for root, _dirs, files in os.walk(pkg_dir):
+            for fn in files:
+                if fn.endswith(".py"):
+                    full = os.path.join(root, fn)
+                    rel = os.path.join(pkg_name,
+                                       os.path.relpath(full, pkg_dir))
+                    z.write(full, rel)
     sc.addPyFile(zpath)
     sc._letl_pkg_shipped = True
 

@@ -7,6 +7,8 @@ inside the operator, so unpersisting cannot cause downstream recompute.
 Operators that return lazily (the n-gram and MinHash pair generators)
 reuse a relation through a lazy localCheckpoint instead, which Spark
 reclaims once the result is unreferenced, so they persist nothing.
+The round loops release every superseded round's checkpoint: only the
+checkpoints their returned frame still reads stay persisted.
 """
 
 from __future__ import annotations
@@ -15,12 +17,16 @@ import threading
 
 import pytest
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from light_etl_windows_container_poc_spark.operators.dedup import (
     connected_components, connected_components_stats, minhash_lsh_pairs,
     ngram_jaccard_pairs)
 from light_etl_windows_container_poc_spark.operators.graph import (
-    pagerank, triangle_count)
+    connected_components_star, k_core, label_propagation, pagerank,
+    triangle_count)
+from light_etl_windows_container_poc_spark.operators.incremental import \
+    greedy_keep
 from light_etl_windows_container_poc_spark.operators.similarity import semdedup
 
 
@@ -62,19 +68,11 @@ def test_triangle_count_releases_caches(spark, persist_tracker):
     assert not persist_tracker
 
 
-def test_pagerank_releases_caches_eager(spark, persist_tracker):
-    e = _edges(spark).select("a_id", "b_id")
-    directed = e.toDF("src", "dst")
-    pr = pagerank(directed, iterations=2, eager_checkpoint=True)
-    assert pr.count() > 0
-    assert not persist_tracker
-
-
-def test_pagerank_releases_caches_lazy(spark, persist_tracker):
+def test_pagerank_releases_caches(spark, persist_tracker):
     directed = _edges(spark).toDF("src", "dst")
-    pr = pagerank(directed, iterations=2, eager_checkpoint=False)
-    # result is pre-materialized by the operator's final eager checkpoint;
-    # a fresh action must not need the released caches
+    pr = pagerank(directed, iterations=2)
+    # result is pre-materialized by the operator's final cut; a fresh
+    # action must not need the released caches or intermediate rounds
     total = pr.agg({"pr": "sum"}).collect()[0][0]
     assert abs(total - 1.0) < 1e-9
     assert not persist_tracker
@@ -155,3 +153,48 @@ def test_semdedup_releases_caches(spark, sf_dir, persist_tracker):
     out = semdedup(emb, "vec_id", "embedding", threshold=0.45, n_clusters=8)
     assert out.count() == emb.count()
     assert not persist_tracker
+
+
+def _persistent_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _checkpoints_read(df: DataFrame) -> set[int]:
+    jvm = df.sparkSession._jvm
+    leaves = jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        df._jdf.queryExecution().analyzed().collectLeaves())
+    return {leaf.rdd().id() for leaf in leaves
+            if leaf.nodeName() == "LogicalRDD"}
+
+
+def _path_and_triangle(spark):
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 7)] + [(10, 11), (11, 12), (10, 12)],
+        "a_id long, b_id long")
+
+
+_ROUND_LOOPS = {
+    "k_core": lambda p: k_core(p, k=2, rounds=3)[0],
+    "label_propagation": lambda p: label_propagation(
+        p.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
+        .union(p.select(F.col("b_id").alias("u"), F.col("a_id").alias("v"))),
+        rounds=3),
+    "connected_components_star": lambda p: connected_components_star(p)[0],
+    "connected_components_stats": lambda p: connected_components_stats(p)[0],
+    "greedy_keep": lambda p: greedy_keep(
+        p.select(F.col("a_id").alias("doc"))
+        .union(p.select(F.col("b_id").alias("doc"))).distinct(), p),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ROUND_LOOPS))
+def test_round_loops_release_superseded_rounds(spark, name):
+    """The RDDs that became persistent during the call and still are
+    afterwards are only checkpoints the returned frame reads. The
+    ContextCleaner can only shrink the leaked set, never grow it."""
+    pairs = _path_and_triangle(spark)
+    before = _persistent_ids(spark)
+    out = _ROUND_LOOPS[name](pairs)
+    leaked = _persistent_ids(spark) - before
+    assert leaked <= _checkpoints_read(out), name
+    assert out.count() > 0

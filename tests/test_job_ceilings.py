@@ -1,18 +1,22 @@
-"""Job-count tripwires for the connected-components round and the
-routed-ingest core.
+"""Job-count tripwires for the connected-components round, the round
+loops' shared lineage cut and the routed-ingest core.
 
 At a fixed input and session the number of Spark jobs is deterministic,
 so a ceiling on it catches a job-diet regression that wall clock would
 hide in noise. Each ceiling sits about 10% above the measured count. The
 connected-components ceilings sit far below the count of the earlier
 round (a left join onto the old labels plus an old-vs-new join to test
-convergence).
+convergence). The round-loop ceilings sit 2 jobs above the most measured
+in 3 runs, below the count when every round paid a separate count job
+after its checkpoint.
 """
 
 from __future__ import annotations
 
 from light_etl_windows_container_poc_spark.operators.dedup import \
     connected_components_stats
+from light_etl_windows_container_poc_spark.operators.graph import \
+    connected_components_star
 from light_etl_windows_container_poc_spark.queries import QUERIES
 from light_etl_windows_container_poc_spark.streaming.excel_pipeline import \
     excel_etl_batch_handler
@@ -38,6 +42,27 @@ def test_entity_resolution_job_ceiling(spark, sf_dir, job_group):
         QUERIES["entity_resolution"](spark, sf_dir).collect()
         jobs = sc.statusTracker().getJobIdsForGroup("er_ceiling")
     assert len(jobs) <= 20
+
+
+def test_graph_kcore_job_ceiling(spark, sf_dir, job_group):
+    """43-45 jobs at the test SF, 57-59 with a count job per round."""
+    with job_group("kcore_ceiling") as sc:
+        QUERIES["graph_kcore"](spark, sf_dir).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("kcore_ceiling")
+    assert len(jobs) <= 47
+
+
+def test_star_cc_path_graph_job_ceiling(spark, job_group):
+    """A 12-node path converges in 5 phases: 57 jobs with the collect,
+    63 with a count job per phase."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 12)], "a_id long, b_id long")
+    with job_group("star_path_ceiling") as sc:
+        comp, phases = connected_components_star(pairs)
+        assert {r.component for r in comp.collect()} == {1}
+        jobs = sc.statusTracker().getJobIdsForGroup("star_path_ceiling")
+    assert phases == 5
+    assert len(jobs) <= 59
 
 
 def test_stream_micro_batch_job_ceiling(spark, tmp_path, job_group):
